@@ -50,7 +50,7 @@ def main() -> None:
 
     from neuscraper_spark import config as C
     from neuscraper_spark.operators.extract import (
-        chunk_nodes, kept_nodes, parse_nodes, predictions, score_nodes, text_nodes,
+        kept_nodes, parse_chunks, predictions, score_nodes, text_nodes,
     )
     from neuscraper_spark.sources.annotate_pb import gold_from_zip, pages_from_zip
     from neuscraper_spark.session import get_spark
@@ -67,10 +67,10 @@ def main() -> None:
     # neural forward and the zip gold parse must not run twice)
     gold = gold_from_zip(spark, args.vdom_zip).cache()
     pages = pages_from_zip(spark, args.vdom_zip)
-    nodes = parse_nodes(pages).cache()
-    tn = text_nodes(nodes).cache()
+    chunks = parse_chunks(pages).cache()
+    tn = text_nodes(chunks).cache()
     pred = predictions(
-        kept_nodes(score_nodes(spark, chunk_nodes(nodes)), threshold=threshold)
+        kept_nodes(score_nodes(spark, chunks), threshold=threshold)
     ).cache()
 
     # text is #N#/#TAB#/#R#-escaped in the files (the reference's eval
@@ -101,7 +101,7 @@ def main() -> None:
             "Metrics for NeuScraper: Acc: %f Prec: %f Rec: %f F1: %f"
             % (m["accuracy"], m["precision"], m["recall"], m["fscore"])
         )
-    nodes.unpersist()
+    chunks.unpersist()
     spark.stop()
 
 

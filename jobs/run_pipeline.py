@@ -2,7 +2,7 @@
 
     spark-submit --py-files neuscraper_spark.zip jobs/run_pipeline.py \
         --input /path/web_pages_parquet --output /path/curated_table \
-        [--partitions 2048] [--mode resume|overwrite] [--fused]
+        [--partitions 2048] [--mode resume|overwrite]
         [--streaming] [--bpe-merges N] [--sample R] [--mix en=0.6,de=0.4]
 
 Packaging: `python jobs/package.py` zips the library for --py-files.
@@ -29,7 +29,6 @@ def main() -> None:
     ap.add_argument("--output", required=True, help="curated table root")
     ap.add_argument("--partitions", type=int, default=None)
     ap.add_argument("--mode", choices=["resume", "overwrite"], default="resume")
-    ap.add_argument("--fused", action="store_true", help="zero-shuffle plan")
     ap.add_argument("--threshold", type=float, default=None)
     ap.add_argument(
         "--compact",
@@ -126,8 +125,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from neuscraper_spark import config as C
-    from neuscraper_spark.operators.extract import extract_curate_fused, extract_pipeline
-    from neuscraper_spark.operators.quality import quality_chain
+    from neuscraper_spark.operators.extract import extract_curate_fused
     from neuscraper_spark.session import get_spark
     from neuscraper_spark.sources.writer import TableWriter, url_host
 
@@ -178,12 +176,9 @@ def main() -> None:
     web_pages = spark.read.parquet(args.input)
     if args.partitions:
         web_pages = web_pages.repartition(args.partitions)
-    if args.fused:
-        # ONE python stage (parse+score+assemble+langid+ppl fused) +
-        # native tail — byte-identical to the staged plan (tested)
-        curated = extract_curate_fused(spark, web_pages, threshold=thr)
-    else:
-        curated = quality_chain(spark, extract_pipeline(spark, web_pages, threshold=thr))
+    # ONE python stage (parse+score+assemble+langid+ppl fused) + native
+    # tail — byte-identical to the staged plan (tested)
+    curated = extract_curate_fused(spark, web_pages, threshold=thr)
     if (args.dedup_urls or args.repetition_filter or args.near_dup is not None
             or args.substring_dedup is not None):
         from neuscraper_spark.operators.curation import apply_corpus_filters

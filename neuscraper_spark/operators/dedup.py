@@ -375,14 +375,14 @@ def _bucket_pair_expand(
     """Bucket membership array -> intra-bucket candidate pairs (x, y)
     with x.id < y.id, WITHOUT a self-join.
 
-    ``pred(y)`` (optional) is an extra per-element predicate evaluated
+    ``pred(x, y)`` (optional) is an extra per-pair predicate evaluated
     INSIDE the membership-array filter, before a pair row is ever
     materialized: the O(bucket^2) element tests still run, but only
     survivors produce Generate output — the r6 fix for hot buckets
     whose expansion is dominated by pairs a later filter drops (simhash
-    hamming: 11.6M expanded rows -> 328k emitted). The predicate sees
-    the lambda element ``y``; reference the exploded left member via
-    ``F.col("x")`` (a bound attribute — safe in a lambda body).
+    hamming: 11.6M expanded rows -> 328k emitted). ``x`` is the
+    exploded left member (a bound attribute — safe in a lambda body)
+    and ``y`` the lambda element.
 
     A self-join of the signature stage on (band, bucket) plans the
     Python signature pipeline TWICE (each join side is its own subtree;
@@ -401,10 +401,11 @@ def _bucket_pair_expand(
     upstream exact dedup keeps identical-doc buckets from exploding.
     """
     e = grouped.select(F.explode(members_col).alias("x"), members_col)
+    x = F.col("x")
 
     def keep(y):
-        base = y["id"] > F.col("x")["id"]
-        return base & pred(y) if pred is not None else base
+        base = y["id"] > x["id"]
+        return base & pred(x, y) if pred is not None else base
 
     return e.select(
         "x",
@@ -683,9 +684,8 @@ def simhash_near_pairs(
     # candidate pairs, 15.4M vs 11.6M.)
     pairs = _bucket_pair_expand(
         grouped,
-        pred=lambda y: (
-            F.bit_count(F.col("x")["simhash"].bitwiseXOR(y["simhash"]))
-            <= F.lit(max_hamming)
+        pred=lambda x, y: (
+            F.bit_count(x["simhash"].bitwiseXOR(y["simhash"])) <= F.lit(max_hamming)
         ),
     )
     hamming = F.bit_count(

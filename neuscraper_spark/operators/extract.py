@@ -16,8 +16,7 @@ Scale notes (100 TB design):
   ``chunk_id`` derives per page, so the r1-r4 ``groupBy(url, chunk_id)``
   exchange moved bytes that were already task-local — the sf1 event log
   measured it at 136% of the corpus' uncompressed html payload
-  (BENCH r5). ``parse_nodes``/``chunk_nodes`` remain as the general
-  node-table operators.
+  (BENCH r5).
 - The reference's J1 join
   (predictions ⟕ text_nodes on (Url, TextNodeId), get_text.py:6-8) is
   *fused away*: node text rides through the chunk structs, and
@@ -59,10 +58,6 @@ from ..html_parser import parse_nodes as _parse_html
 from ..model import load_weights, score_chunks, shm_cache_weights
 from ..tokenizer import tokenize
 
-NODES_DDL = (
-    "url string, seq_pos int, node_id int, tag string, text string, "
-    "token_ids array<int>, chunk_id int, is_text_node boolean"
-)
 CHUNKS_DDL = (
     "url string, chunk_id int, "
     "nodes array<struct<seq_pos:int,node_id:int,token_ids:array<int>,text:string>>"
@@ -71,106 +66,43 @@ SCORED_DDL = "url string, node_id int, text string, scores array<float>"
 EXTRACTED_DDL = "url string, text string"
 
 
-def _page_sequence(html_bytes: bytes) -> list[dict]:
-    """One page -> its model-sequence rows (pure Python, shared with oracle).
+def _page_sequence(html_bytes: bytes, max_len: int = C.MODEL_MAX_TOKEN_LEN) -> list[dict]:
+    """One page -> its model-sequence rows ``seq_pos, node_id, text,
+    token_ids`` — the package's only page -> sequence walk.
 
     Reference semantics (src/warc/build.py:74-98): iterate nodes in
     document order; text nodes join the sequence iff stripped text is
-    non-empty; <ol>/<dl>/<table> element nodes always join (the CSV
-    text-node side additionally requires non-empty, build.py:155-165 —
-    captured by ``is_text_node``).
+    non-empty; <ol>/<dl>/<table> element nodes always join. The CSV
+    text-node side (build.py:155-165) is the members with ``text != ""``.
+
+    ``max_len`` is the token row width: the MODEL_MAX_TOKEN_LEN the
+    scorer reads (default), or the reference's PREP_MAX_TOKEN_LEN for
+    the encoded-chunk JSON. Tokenizing straight to the model width is
+    provably identical to tokenizing to 50 ids and truncating
+    (processing.py:50) — BOS + first 3 pieces + EOS/PAD agree
+    case-by-case; pinned by tests/test_model.py.
     """
     html = decode_html(html_bytes)
     if html is None:
         # F2: undecodable/binary page -> dropped (src/warc/build.py:124-131)
         return []
     rows = []
-    seq_pos = 0
     for node in _parse_html(html):
         stripped = strip_ws_py(node.text)
         if node.is_text:
             if not stripped:
                 continue
-            is_text_node = True
-        elif node.tag in C.SEQ_ELEMENT_TAGS:
-            is_text_node = len(stripped) > 0
-        else:
+        elif node.tag not in C.SEQ_ELEMENT_TAGS:
             continue
-        # tokenize straight to the MODEL_MAX_TOKEN_LEN the scorer reads:
-        # provably identical to tokenizing to the reference's 50 ids and
-        # truncating (processing.py:50) — BOS + first 3 pieces + EOS/PAD
-        # agree case-by-case; pinned by tests/test_model.py. The 50-id
-        # preprocessing table is produced by encode_chunks() only.
         rows.append(
             {
-                "seq_pos": seq_pos,
+                "seq_pos": len(rows),
                 "node_id": node.node_id,
-                "tag": node.tag,
                 "text": stripped,
-                "token_ids": tokenize(stripped, max_len=C.MODEL_MAX_TOKEN_LEN),
-                "chunk_id": seq_pos // C.CHUNK_SIZE,
-                "is_text_node": is_text_node,
+                "token_ids": tokenize(stripped, max_len=max_len),
             }
         )
-        seq_pos += 1
     return rows
-
-
-def parse_nodes(web_pages: DataFrame) -> DataFrame:
-    """web_pages -> node-level DataFrame (T1/T2 as one Arrow UDTF).
-
-    Narrow: one input page row expands to its node rows inside the same
-    task; no shuffle. Only sequence members are emitted — whitespace
-    spans and structural divs die here, before any exchange.
-    """
-    cols = web_pages.select("url", "html")
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                for row in _page_sequence(html):
-                    row["url"] = url
-                    out.append(row)
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "url", "seq_pos", "node_id", "tag", "text",
-                    "token_ids", "chunk_id", "is_text_node",
-                ],
-            )
-
-    return cols.mapInPandas(parse, schema=NODES_DDL)
-
-
-def text_nodes(nodes: DataFrame) -> DataFrame:
-    """The reference's text-node CSV side (src/warc/build.py:155-165)."""
-    return nodes.filter(F.col("is_text_node")).select(
-        "url", F.col("node_id").alias("text_node_id"), "text"
-    )
-
-
-def chunk_nodes(nodes: DataFrame) -> DataFrame:
-    """Nodes -> one row per (url, chunk_id) with ordered node structs (T3).
-
-    array_sort inside the agg restores document order regardless of
-    shuffle arrival order — the plan stays order-agnostic. Token ids are
-    sliced to the MODEL_MAX_TOKEN_LEN-1 the model actually consumes
-    (processing.py:50 truncates identically) *before* the shuffle —
-    ~12x less token payload through the exchange at any scale.
-    """
-    return nodes.groupBy("url", "chunk_id").agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    "seq_pos",
-                    "node_id",
-                    F.slice("token_ids", 1, C.MODEL_MAX_TOKEN_LEN - 1).alias("token_ids"),
-                    "text",
-                )
-            )
-        ).alias("nodes")
-    )
 
 
 def parse_chunks(web_pages: DataFrame) -> DataFrame:
@@ -179,18 +111,13 @@ def parse_chunks(web_pages: DataFrame) -> DataFrame:
     ``chunk_id = seq_pos // CHUNK_SIZE`` is a per-page derivation and a
     page is one input row, so every node of a chunk is born in the same
     task, already in document order: the ``groupBy(url, chunk_id)``
-    route (``chunk_nodes``) exchanges bytes it could have kept local.
+    route (r1-r4) exchanged bytes it could have kept local.
     Event-log evidence at sf1 (BENCH r5): the grouped route shuffled
     785 MB — 136% of the corpus' uncompressed html payload — because
     every node's text + token ids crossed the wire before scoring.
     Emitting chunks narrow removes that exchange entirely; the staged
     pipeline keeps ONE url-keyed shuffle (kept-text assembly) and its
     exchange carries only the ~kept fraction of extracted text.
-
-    ``chunk_nodes`` remains the general operator for node tables that
-    did not originate in this parser (and for the w3 oracle); outputs
-    are identical by construction (array_sort(seq_pos) == birth order),
-    pinned by tests/test_pipeline.py::test_narrow_chunking_identical.
     """
     cols = web_pages.select("url", "html")
     keep_ids = C.MODEL_MAX_TOKEN_LEN - 1
@@ -217,9 +144,21 @@ def parse_chunks(web_pages: DataFrame) -> DataFrame:
                             for r in chunk
                         ]
                     )
-            yield pd.DataFrame({"url": urls, "chunk_id": cids, "nodes": nodes_col})
+            if urls:  # an all-empty batch would infer float64 columns
+                yield pd.DataFrame({"url": urls, "chunk_id": cids, "nodes": nodes_col})
 
     return cols.mapInPandas(parse, schema=CHUNKS_DDL)
+
+
+def text_nodes(chunks: DataFrame) -> DataFrame:
+    """The reference's text-node CSV side (src/warc/build.py:155-165):
+    the sequence members of ``parse_chunks`` with non-empty text."""
+    n = F.col("n")
+    return (
+        chunks.select("url", F.explode("nodes").alias("n"))
+        .filter(n["text"] != "")
+        .select("url", n["node_id"].alias("text_node_id"), n["text"].alias("text"))
+    )
 
 
 _WEIGHTS_BC = {}
@@ -447,22 +386,3 @@ def threshold_sweep(scored: DataFrame, thresholds=C.THRESHOLD_SWEEP) -> DataFram
         .filter(F.col("score") > F.col("threshold"))
         .select("url", "node_id", "task", "threshold")
     )
-
-
-def threshold_sweep_counts(scored: DataFrame, thresholds=C.THRESHOLD_SWEEP) -> DataFrame:
-    """Per (task, θ): number of predicted nodes — one pass over scores."""
-    tasks = F.array(*[F.lit(t) for t in C.TASKS])
-    per_task = (
-        scored.filter(F.col("node_id") != 0)
-        .select(
-            "url", "node_id",
-            F.posexplode(F.col("scores")).alias("task_idx", "score"),
-        )
-        .withColumn("task", tasks[F.col("task_idx")])
-    )
-    thr_rows = [(float(t),) for t in thresholds]
-    agg = [
-        F.sum(F.when(F.col("score") > F.lit(t), 1).otherwise(0)).alias(f"n_{str(t).replace('.', '_')}")
-        for t, in thr_rows
-    ]
-    return per_task.groupBy("task").agg(*agg)

@@ -16,29 +16,16 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from .. import config as C
-from ..functions.encoding import decode_html
-from ..functions.text import strip_ws_py
-from ..html_parser import parse_nodes as _parse_html
-from ..tokenizer import tokenize
+from .extract import _page_sequence
 
 
 def page_chunk_jsons(url: str, html: bytes) -> list[str]:
     """Pure-python per-page chunk JSON lines (shared with tests)."""
     import json
 
-    text = decode_html(html)
-    if text is None:
-        return []
-    node_ids, token_rows = [], []
-    for node in _parse_html(text):
-        stripped = strip_ws_py(node.text)
-        if node.is_text:
-            if not stripped:
-                continue
-        elif node.tag not in C.SEQ_ELEMENT_TAGS:
-            continue
-        node_ids.append(node.node_id)
-        token_rows.append(tokenize(stripped, C.PREP_MAX_TOKEN_LEN))
+    rows = _page_sequence(html, max_len=C.PREP_MAX_TOKEN_LEN)
+    node_ids = [r["node_id"] for r in rows]
+    token_rows = [r["token_ids"] for r in rows]
     out = []
     for i in range(0, len(node_ids), C.CHUNK_SIZE):
         chunk = {

@@ -7,7 +7,8 @@ src/warc/build.py:133-142); all built from public-knowledge designs.
 
 Every stage is a pure ``DataFrame -> DataFrame`` function. Heuristics
 and scrubbing are Catalyst-native expressions (zero Python in the hot
-path); langid and perplexity are Arrow-vectorized ``pandas_udf``s with
+path); langid and perplexity run together in one ``mapInPandas`` stage
+(``with_langid_ppl``, or folded into ``extract.extract_fused``) over
 broadcast model tables. Each has a ``*_py`` twin with identical
 semantics used by the single-process oracle (oracle.py) — property
 tests assert twin agreement.
@@ -19,7 +20,6 @@ import math
 import re
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -111,27 +111,6 @@ def langid_scores_batch(texts, langs=None, mat=None) -> tuple[list[str], list[fl
 def langid_scores_py(text: str) -> tuple[str, float]:
     preds, confs = langid_scores_batch([text or ""])
     return preds[0], confs[0]
-
-
-def with_langid(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Adds ``lang_pred`` and ``lang_conf`` via an Arrow-vectorized UDF.
-
-    The profile matrix is tiny and is captured in the UDF closure —
-    serialized once per task via the same broadcast mechanics Spark uses
-    for closures; for a real fastText-sized model use
-    ``sc.broadcast`` explicitly (see extract.score_nodes for the pattern).
-    """
-    langs, mat = _profiles()
-
-    @F.pandas_udf("struct<lang_pred:string,lang_conf:double>")
-    def _langid(texts: pd.Series) -> pd.DataFrame:
-        preds, confs = langid_scores_batch(texts, langs, mat)
-        return pd.DataFrame({"lang_pred": preds, "lang_conf": confs})
-
-    res = df.withColumn("_lid", _langid(F.col(text_col)))
-    return res.withColumn("lang_pred", F.col("_lid.lang_pred")).withColumn(
-        "lang_conf", F.col("_lid.lang_conf")
-    ).drop("_lid")
 
 
 # --------------------------------------------------------------------------
@@ -276,22 +255,6 @@ def ppl_batch(texts, tables=None) -> list[float]:
 
 def ppl_py(text: str, tables=None) -> float:
     return ppl_batch([text], tables)[0]
-
-
-def with_perplexity(spark, df: DataFrame, text_col: str = "text", tables=None) -> DataFrame:
-    """Adds ``ppl`` via a pandas_udf over explicitly broadcast count tables.
-
-    ``tables`` defaults to the seed-corpus LM; pass the output of
-    ``build_ppl_tables_from_texts`` to score against a domain sample.
-    """
-    bc = spark.sparkContext.broadcast(tables if tables is not None else _ppl_tables())
-
-    @F.pandas_udf("double")
-    def _ppl(texts: pd.Series) -> pd.Series:
-        tables = bc.value
-        return pd.Series(ppl_batch(texts.tolist(), tables), index=texts.index)
-
-    return df.withColumn("ppl", _ppl(F.col(text_col)))
 
 
 # --------------------------------------------------------------------------

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.writer import url_host
+
 _BUCKETS = 1 << 32
 
 
@@ -151,7 +153,7 @@ def assign_split(
       host, so every page of a site — including near-duplicates the
       dedup pass missed — lands in the SAME split (C4/Pile
       methodology: page-level splits leak templated content across
-      train/test).
+      train/test). A url with no http(s):// host keys on the full url.
     - **Band nesting**: bands are cumulative prefixes of the hash
       space, so growing the first split's weight only ADDS keys to it;
       no key ever swaps between two existing splits when a later
@@ -165,11 +167,12 @@ def assign_split(
         raise ValueError(f"split weights must sum to 1, got {total}")
     if len(weights) < 2:
         raise ValueError("need >= 2 splits")
-    key = (
-        F.regexp_extract(F.col(key_col), r"^https?://([^/]+)", 1)
-        if by_host
-        else F.col(key_col).cast("string")
-    )
+    key = F.col(key_col).cast("string")
+    if by_host:
+        # a url without an http(s):// host keys on itself: an empty-host
+        # key would put every such url in ONE split
+        host = url_host(F.col(key_col))
+        key = F.when(host != "", host).otherwise(key)
     h = F.substring(F.md5(F.concat(F.lit(salt), key)), 1, 8)
     names = list(weights)
     acc = 0.0

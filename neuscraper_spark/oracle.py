@@ -38,7 +38,7 @@ def _weights():
 def extract_page(url: str, html: bytes, threshold: float = C.PRIMARY_THRESHOLD):
     """One page -> (extracted_text | None, kept node ids, text_node rows)."""
     rows = _page_sequence(html)
-    text_node_rows = [(r["node_id"], r["text"]) for r in rows if r["is_text_node"]]
+    text_node_rows = [(r["node_id"], r["text"]) for r in rows if r["text"]]
     chunks = [
         [r["token_ids"] for r in rows[i : i + C.CHUNK_SIZE]]
         for i in range(0, len(rows), C.CHUNK_SIZE)

@@ -122,35 +122,15 @@ def prep_nodes(web_pages: DataFrame) -> DataFrame:
     """Parse stage emitting PREPROCESSING-width (50-id) token rows —
     the input contract of encode_chunks_json_native. Parsing is python
     (T1 must be), everything after is Catalyst."""
-    from ..functions.encoding import decode_html
-    from ..functions.text import strip_ws_py
-    from ..html_parser import parse_nodes as _parse_html
-    from ..tokenizer import tokenize
+    from ..operators.extract import _page_sequence
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
             for url, html in zip(pdf["url"], pdf["html"]):
-                text = decode_html(html)
-                if text is None:
-                    continue
-                seq = 0
-                for node in _parse_html(text):
-                    stripped = strip_ws_py(node.text)
-                    if node.is_text:
-                        if not stripped:
-                            continue
-                    elif node.tag not in C.SEQ_ELEMENT_TAGS:
-                        continue
-                    out.append(
-                        {
-                            "url": url,
-                            "seq_pos": seq,
-                            "node_id": node.node_id,
-                            "token_ids": tokenize(stripped, C.PREP_MAX_TOKEN_LEN),
-                        }
-                    )
-                    seq += 1
+                for r in _page_sequence(html, max_len=C.PREP_MAX_TOKEN_LEN):
+                    r["url"] = url
+                    out.append(r)
             yield pd.DataFrame(out, columns=["url", "seq_pos", "node_id", "token_ids"])
 
     return web_pages.select("url", "html").mapInPandas(
@@ -161,8 +141,8 @@ def prep_nodes(web_pages: DataFrame) -> DataFrame:
 def encode_chunks_json_native(nodes: DataFrame) -> DataFrame:
     """C8 — chunk JSON lines with NATIVE to_json, no Python in the encode.
 
-    Input is the parse stage's node table (extract.parse_nodes with
-    50-id token rows, or labels-bearing nodes); the chunk grouping and
+    Input is a node table with 50-id token rows (``prep_nodes``, or
+    labels-bearing nodes); the chunk grouping and
     the JSON encoding are pure Catalyst. Byte-compatible with the
     reference's json.dumps(separators=(',', ':')) (build.py:102-103):
     struct field order pins key order, to_json emits compact separators.

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from neuscraper_spark import config as C
 from neuscraper_spark.functions.encoding import decode_html
-from neuscraper_spark.operators.extract import _page_sequence, parse_nodes, score_nodes, chunk_nodes
+from neuscraper_spark.operators.extract import _page_sequence, parse_chunks, score_nodes
 from neuscraper_spark.operators.parity import encode_chunks_json, page_chunk_jsons
 from neuscraper_spark.sources.chunks import (
     encode_chunks_json_native,
@@ -79,9 +79,17 @@ def test_parse_nodes_spark_matches_py_on_mixed_encodings(spark):
         ("u3", BODY.encode("utf-16")),
     ]
     df = spark.createDataFrame(pd.DataFrame(pages, columns=["url", "html"]))
-    got = parse_nodes(df).select("url", "text").toPandas()
+    got = parse_chunks(df).select("url").toPandas()
     want_urls = {u for u, h in pages if _page_sequence(h)}
     assert set(got["url"]) == want_urls == {"u0", "u1", "u3"}
+
+
+def test_parse_chunks_batch_without_sequence_nodes(spark):
+    # an Arrow batch whose pages all yield no sequence node (binary,
+    # empty markup) emits no chunk rows instead of failing the task
+    pages = [("u0", b"\x00\x01binary"), ("u1", b"<html></html>")]
+    df = spark.createDataFrame(pd.DataFrame(pages, columns=["url", "html"])).coalesce(1)
+    assert parse_chunks(df).count() == 0
 
 
 # ------------------------------------------------- S5 reader/scorer roundtrip
@@ -107,7 +115,7 @@ def test_encoded_chunk_roundtrip_scores_match_pipeline(spark, wp, tmp_path):
         .select("url", "text_node_id")
         .toPandas()
     )
-    scored = score_nodes(spark, chunk_nodes(parse_nodes(wp)))
+    scored = score_nodes(spark, parse_chunks(wp))
     want = (
         scored.filter(
             (F.col("scores")[0] > C.PRIMARY_THRESHOLD) & (F.col("node_id") != 0)

@@ -7,9 +7,8 @@ import pytest
 
 from neuscraper_spark.operators import labels as L
 from neuscraper_spark.operators.extract import (
-    chunk_nodes,
     kept_nodes,
-    parse_nodes,
+    parse_chunks,
     predictions,
     score_nodes,
     text_nodes,
@@ -64,10 +63,10 @@ def test_corpus_scale_eval_against_tag_gold(spark):
     reference's eval — sanity-gates that the scorer behaves like a
     content extractor (not a correctness gate; labels are synthetic)."""
     wp = web_pages_df(spark, seed=7, n_pages=30, partitions=4).cache()
-    nodes = parse_nodes(wp)
-    scored = score_nodes(spark, chunk_nodes(nodes))
+    chunks = parse_chunks(wp)
+    scored = score_nodes(spark, chunks)
     preds = predictions(kept_nodes(scored))
-    tn = text_nodes(nodes)
+    tn = text_nodes(chunks)
     gold = L.gold_table(spark, wp)
     m = evaluate(preds, tn, gold).toPandas().iloc[0]
     assert m["tp"] > 0 and m["tn"] > 0

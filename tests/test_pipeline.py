@@ -10,11 +10,10 @@ import pytest
 from neuscraper_spark import oracle
 from neuscraper_spark.corpus import gen_pages, web_pages_df
 from neuscraper_spark.operators.extract import (
-    chunk_nodes,
     extract_fused,
     extract_pipeline,
     kept_nodes,
-    parse_nodes,
+    parse_chunks,
     score_nodes,
     text_nodes,
 )
@@ -49,24 +48,6 @@ def test_fused_byte_identical(spark, web_pages, oracle_extracted):
     pd.testing.assert_frame_equal(got, oracle_extracted)
 
 
-def test_narrow_chunking_identical(spark, web_pages):
-    """parse_chunks (narrow, r5 single-shuffle staged plan) must emit
-    exactly what parse_nodes -> chunk_nodes (the general grouped route)
-    aggregates — same chunks, same node structs, same order inside."""
-    from neuscraper_spark.operators.extract import parse_chunks
-
-    def normalize(df):
-        pdf = df.toPandas()
-        pdf["nodes"] = pdf["nodes"].map(
-            lambda ns: [tuple(n) for n in ns]
-        )
-        return pdf.sort_values(["url", "chunk_id"]).reset_index(drop=True)
-
-    narrow = normalize(parse_chunks(web_pages))
-    grouped = normalize(chunk_nodes(parse_nodes(web_pages)))
-    pd.testing.assert_frame_equal(narrow, grouped)
-
-
 def test_partitioning_invariance(spark, oracle_extracted):
     """Same corpus at a different partition count -> same bytes (the
     local[8]-vs-local[32] scaling claim depends on this)."""
@@ -76,7 +57,7 @@ def test_partitioning_invariance(spark, oracle_extracted):
 
 
 def test_text_nodes_match_oracle(spark, web_pages, pages):
-    got = text_nodes(parse_nodes(web_pages)).toPandas()
+    got = text_nodes(parse_chunks(web_pages)).toPandas()
     got = got.sort_values(["url", "text_node_id"]).reset_index(drop=True)
     rows = []
     for p in pages:
@@ -92,7 +73,7 @@ def test_text_nodes_match_oracle(spark, web_pages, pages):
 
 
 def test_kept_node_ids_match_oracle(spark, web_pages, pages):
-    scored = score_nodes(spark, chunk_nodes(parse_nodes(web_pages)))
+    scored = score_nodes(spark, parse_chunks(web_pages))
     got = kept_nodes(scored).select("url", "node_id").toPandas()
     got_sets = got.groupby("url")["node_id"].agg(set).to_dict()
     for p in pages:
@@ -121,7 +102,7 @@ def test_threshold_sweep_counts(spark, web_pages):
     consistent with kept_nodes at θ=0.9."""
     from neuscraper_spark.operators.extract import threshold_sweep
 
-    scored = score_nodes(spark, chunk_nodes(parse_nodes(web_pages))).cache()
+    scored = score_nodes(spark, parse_chunks(web_pages)).cache()
     sweep = threshold_sweep(scored).toPandas()
     prim = sweep[sweep.task == "Primary"]
     by_thr = prim.groupby("threshold")["node_id"].count()
@@ -134,7 +115,7 @@ def test_threshold_sweep_counts(spark, web_pages):
 
 def test_threshold_monotonicity(spark, web_pages):
     """Lower θ keeps a superset of nodes (M2 sweep semantics)."""
-    scored = score_nodes(spark, chunk_nodes(parse_nodes(web_pages))).cache()
+    scored = score_nodes(spark, parse_chunks(web_pages)).cache()
     hi = kept_nodes(scored, threshold=0.9).count()
     lo = kept_nodes(scored, threshold=0.5).count()
     assert lo >= hi > 0

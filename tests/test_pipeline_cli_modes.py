@@ -72,7 +72,7 @@ def test_bpe_budget_annotation(spark, page_drop, tmp_path, monkeypatch):
         )
     _run_main(
         monkeypatch,
-        ["--input", page_drop, "--output", out, "--fused",
+        ["--input", page_drop, "--output", out,
          "--bpe-merges", "64"],
     )
     w = TableWriter(out, partition_col="host_bucket")
@@ -91,7 +91,7 @@ def test_compact_zorder_flag(spark, page_drop, tmp_path, monkeypatch):
     out = str(tmp_path / "tblz")
     _run_main(
         monkeypatch,
-        ["--input", page_drop, "--output", out, "--fused",
+        ["--input", page_drop, "--output", out,
          "--compact", "--compact-zorder", "ppl,n_words",
          "--compact-files", "2"],
     )

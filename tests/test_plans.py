@@ -224,19 +224,21 @@ def test_doc_shape_shingle_staging_survives_optimizer(spark):
     # lambdafunction(.
     import re
 
-    import pandas as pd
-
     from neuscraper_spark.operators.dedup import exact_shingle_jaccard_pairs
 
-    docs = spark.createDataFrame(
-        pd.DataFrame(
-            {"doc_id": [1, 2], "text": ["Some Document Text Here", "some document text here"]}
-        )
+    # spark.range, not createDataFrame: the optimizer folds a plan over
+    # local relations into one LocalRelation, leaving no lambda to check
+    docs = spark.range(1, 3).selectExpr(
+        "id AS doc_id",
+        "IF(id = 1, 'Some Document Text Here', 'some document text here') AS text",
     )
-    pairs = spark.createDataFrame(pd.DataFrame({"id_a": [1], "id_b": [2]}))
+    pairs = spark.range(1, 2).selectExpr("id AS id_a", "id + 1 AS id_b")
     out = exact_shingle_jaccard_pairs(pairs, docs, threshold=0.5, shingle_per="doc")
     plan = out._jdf.queryExecution().optimizedPlan().toString()
-    for m in re.finditer(r"lambdafunction\(", plan):
+    lambdas = list(re.finditer(r"lambdafunction\(", plan))
+    # no lambda at all would make the scan below pass vacuously
+    assert lambdas, "no lambdafunction( in the optimized plan:\n" + plan
+    for m in lambdas:
         # scan the lambda body (to its balancing paren) for lower(
         depth, i = 1, m.end()
         while i < len(plan) and depth:

@@ -33,7 +33,7 @@ def df(spark):
 
 
 def test_langid_twins_agree(spark, df):
-    got = Q.with_langid(df).select("url", "lang_pred", "lang_conf").toPandas()
+    got = Q.with_langid_ppl(spark, df).select("url", "lang_pred", "lang_conf").toPandas()
     for _, row in got.iterrows():
         lang, conf = Q.langid_scores_py(TEXTS[int(row["url"][1:])])
         assert row["lang_pred"] == lang
@@ -49,7 +49,7 @@ def test_langid_detects_languages():
 
 
 def test_ppl_twins_agree(spark, df):
-    got = Q.with_perplexity(spark, df).select("url", "ppl").toPandas()
+    got = Q.with_langid_ppl(spark, df).select("url", "ppl").toPandas()
     for _, row in got.iterrows():
         assert row["ppl"] == Q.ppl_py(TEXTS[int(row["url"][1:])])
 

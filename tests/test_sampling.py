@@ -178,6 +178,23 @@ def test_split_by_host_is_leakage_safe(spark):
     assert all(r["n"] == 1 for r in per_host)  # one split per site
 
 
+def test_split_by_host_spreads_hostless_urls(spark):
+    """A url with no http(s):// host keys on the full url: the hostless
+    urls spread over the splits exactly as without by_host, instead of
+    sharing the empty-host key and landing in one split."""
+    from neuscraper_spark.operators.sampling import assign_split
+
+    weights = {"train": 0.6, "val": 0.2, "test": 0.2}
+    df = spark.range(0, 300).selectExpr(
+        "concat('site', cast(id as string), '.example.com/page') AS url"
+    )
+    by_host = {r["url"]: r["split"]
+               for r in assign_split(df, weights, by_host=True).collect()}
+    by_url = {r["url"]: r["split"] for r in assign_split(df, weights).collect()}
+    assert by_host == by_url
+    assert set(by_host.values()) == set(weights)
+
+
 def test_split_validation(spark):
     from neuscraper_spark.operators.sampling import assign_split
 

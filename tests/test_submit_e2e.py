@@ -49,7 +49,7 @@ def test_spark_submit_pipeline_and_resume(spark, input_parquet, tmp_path):
         "--conf", "spark.ui.enabled=false",
         os.path.join(REPO, "jobs", "run_pipeline.py"),
         "--input", input_parquet, "--output", out_table,
-        "--partitions", "4", "--fused", "--dedup-urls", "--metrics",
+        "--partitions", "4", "--dedup-urls", "--metrics",
         # sampling/mixing plumbing rides the same submit: a 0.9
         # deterministic draw (same rows on the resume re-run, so row
         # counts still converge) and a mix whose huge budget caps every
@@ -100,7 +100,7 @@ def test_spark_submit_multi_executor_cluster(spark, input_parquet, tmp_path):
         "--conf", "spark.executor.memory=1g",
         os.path.join(REPO, "jobs", "run_pipeline.py"),
         "--input", input_parquet, "--output", out_table,
-        "--partitions", "4", "--fused",
+        "--partitions", "4",
     ]
     env = dict(os.environ, PYSPARK_PYTHON=sys.executable)
     r = subprocess.run(cmd, capture_output=True, text=True, timeout=540, env=env)
@@ -114,7 +114,7 @@ def test_inference_cli_roundtrip(spark, input_parquet, tmp_path):
     from pyspark.sql import functions as F
 
     from neuscraper_spark import config as C
-    from neuscraper_spark.operators.extract import chunk_nodes, parse_nodes, score_nodes
+    from neuscraper_spark.operators.extract import parse_chunks, score_nodes
     from neuscraper_spark.operators.parity import encode_chunks_json
 
     wp = spark.read.parquet(input_parquet)
@@ -137,7 +137,7 @@ def test_inference_cli_roundtrip(spark, input_parquet, tmp_path):
         .toPandas()
     )
     want = (
-        score_nodes(spark, chunk_nodes(parse_nodes(wp)))
+        score_nodes(spark, parse_chunks(wp))
         .filter((F.col("scores")[0] > C.PRIMARY_THRESHOLD) & (F.col("node_id") != 0))
         .select("url", F.col("node_id").alias("text_node_id"))
         .toPandas()
