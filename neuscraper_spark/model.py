@@ -21,8 +21,11 @@ Primary head behaves like a trained content extractor (long prose nodes
 score > 0.9, nav crumbs score low) instead of hovering at 0.5. It is a
 deterministic function of the inputs, shared bit-for-bit by the oracle.
 
-Scores are quantized to SCORE_DECIMALS before any thresholding so batch
-shape / BLAS kernel choice cannot flip decisions (SURVEY.md §7).
+A chunk is scored at its own trimmed length, never padded to a batch
+neighbour's, so its scores are bit-identical whatever batch it shares
+(score_chunks). Scores are also quantized to SCORE_DECIMALS before any
+thresholding, so the last-bit noise of another BLAS kernel cannot flip
+decisions (SURVEY.md §7).
 
 The weight dict is what gets broadcast to executors
 (sc.broadcast(load_weights())) — the Spark twin of the reference loading
@@ -155,12 +158,6 @@ def _layer_norm(x: np.ndarray, g: np.ndarray, b: np.ndarray) -> np.ndarray:
     return ((x - mu) / np.sqrt(var + F32(1e-5)) * g + b).astype(F32)
 
 
-def _softmax(x: np.ndarray, axis: int = -1) -> np.ndarray:
-    x = x - x.max(axis=axis, keepdims=True)
-    e = np.exp(x, dtype=F32)
-    return e / e.sum(axis=axis, keepdims=True, dtype=F32)
-
-
 def _attention_block(x: np.ndarray, w: dict, l: int, node_mask: np.ndarray) -> np.ndarray:
     """One post-LN transformer layer over the node axis. x: [B,S,D]."""
     B, S, D = x.shape
@@ -173,10 +170,16 @@ def _attention_block(x: np.ndarray, w: dict, l: int, node_mask: np.ndarray) -> n
         return t.reshape(B, S, H, dh).transpose(0, 2, 1, 3)
 
     q, k, v = heads(q), heads(k), heads(v)
-    att = (q @ k.transpose(0, 1, 3, 2)) / F32(np.sqrt(dh))  # [B,H,S,S]
+    # Scale, mask and softmax the one [B,H,S,S] score array in place:
+    # it is the largest transient of the forward pass, so no step may
+    # copy it.
+    att = q @ k.transpose(0, 1, 3, 2)
+    att /= F32(np.sqrt(dh))
     # mask out padded node positions as attention keys
-    att = np.where(node_mask[:, None, None, :], att, F32(-1e9))
-    att = _softmax(att, axis=-1)
+    np.copyto(att, F32(-1e9), where=~node_mask[:, None, None, :])
+    att -= att.max(axis=-1, keepdims=True)
+    np.exp(att, out=att)
+    att /= att.sum(axis=-1, keepdims=True, dtype=F32)
     out = (att @ v).transpose(0, 2, 1, 3).reshape(B, S, D)
     out = out @ w[f"l{l}_proj_w"] + w[f"l{l}_proj_b"]
     x = _layer_norm((x + out).astype(F32), w[f"l{l}_ln1_g"], w[f"l{l}_ln1_b"])
@@ -263,24 +266,30 @@ def score_batch(token_ids: np.ndarray, token_masks: np.ndarray, w: dict) -> np.n
     return scores
 
 
-# Micro-batch size for the NumPy forward pass: bounds the transient
-# attention tensor [B, heads, S, S] regardless of the Arrow batch size
-# (the Arrow batch ~ the reference's DataLoader batch of 256,
-# src/scraper/commoncrawl.py:84; the micro-batch is a memory knob only —
-# per-chunk results are independent of batch composition, asserted by
-# tests/test_model.py).
-MICRO_BATCH = 16
+# Byte budget of one micro-batch's attention scores [B, NODE_HEADS, S, S]
+# float32. Chunks of one trimmed length S are scored together, at most
+# ATT_BYTES // (NODE_HEADS * S * S * 4) at a time (at least one), so the
+# array the softmax sweeps stays cache-sized whatever the Arrow batch
+# size (the Arrow batch ~ the reference's DataLoader batch of 256,
+# src/scraper/commoncrawl.py:84): ~28 chunks at S = 24, one at S = 384.
+ATT_BYTES = 1 << 18
 
 
 def score_chunks(chunks_token_ids: list[list[list[int]]], w: dict) -> np.ndarray:
     """Score a list of chunks (each: list of per-node 50-id rows).
 
-    Returns [n_chunks, CHUNK_SIZE, NUM_CLASSES] quantized scores. The
-    node axis is trimmed to the longest real chunk (rounded up to a
-    multiple of 8)
-    before the forward pass — valid because padded node positions are
-    masked out of attention, so real-node scores are independent of the
-    padded tail — and re-padded with zeros on return.
+    Returns [n_chunks, CHUNK_SIZE, NUM_CLASSES] quantized scores. Each
+    chunk's node axis is trimmed to ITS OWN real length rounded up to a
+    multiple of 8 — valid because padded node positions are masked out
+    of attention (exactly-zero softmax weights), so real-node scores do
+    not depend on the padded tail — and re-padded with zeros on return.
+    Attention is O(S^2) in the node axis, so a short chunk never pays
+    for a long one. Only chunks of the same trimmed length share a
+    micro-batch (see ATT_BYTES), and every matmul in the forward pass
+    runs per chunk at that length, so a chunk's scores are a function of
+    the chunk alone: bit-identical whether it is scored alone, in any
+    batch, or in any order (asserted by tests/test_model.py). This is
+    what lets the per-page oracle equal the batched Spark stages.
     """
     n = len(chunks_token_ids)
     out = np.zeros((n, CHUNK_SIZE, NUM_CLASSES), dtype=F32)
@@ -288,22 +297,14 @@ def score_chunks(chunks_token_ids: list[list[list[int]]], w: dict) -> np.ndarray
         return out
     ids = np.zeros((n, CHUNK_SIZE, MODEL_MAX_TOKEN_LEN), dtype=np.int64)
     masks = np.zeros((n, CHUNK_SIZE, MODEL_MAX_TOKEN_LEN), dtype=bool)
-    n_nodes = np.ones(n, dtype=np.int64)
+    s_trim = np.empty(n, dtype=np.int64)
     for i, rows in enumerate(chunks_token_ids):
         ids[i], masks[i] = tensorize_chunk(rows)
-        n_nodes[i] = max(1, min(len(rows), CHUNK_SIZE))
-    # Length-bucketed micro-batches: attention is O(S^2) in the node
-    # axis, so group chunks of similar real length (stable argsort) and
-    # trim each micro-batch to ITS OWN max (rounded up to a multiple
-    # of 8) rather
-    # than the whole batch's — a lone 384-node page no longer makes
-    # every micro-batch pay [B, H, 384, 384]. Valid for the same reason
-    # as the global trim: padded node positions are masked out of
-    # attention (exactly-zero softmax weights), so real-node scores are
-    # independent of the padded tail — asserted by tests/test_model.py.
-    order = np.argsort(n_nodes, kind="stable")
-    for lo in range(0, n, MICRO_BATCH):
-        sel = order[lo : lo + MICRO_BATCH]
-        s_trim = min(CHUNK_SIZE, int((n_nodes[sel].max() + 7) // 8) * 8)
-        out[sel, :s_trim] = score_batch(ids[sel, :s_trim], masks[sel, :s_trim], w)
+        s_trim[i] = min(CHUNK_SIZE, (max(1, len(rows)) + 7) // 8 * 8)
+    for s in np.unique(s_trim).tolist():
+        same = np.flatnonzero(s_trim == s)
+        step = max(1, ATT_BYTES // (NODE_HEADS * s * s * 4))
+        for lo in range(0, len(same), step):
+            sel = same[lo : lo + step]
+            out[sel, :s] = score_batch(ids[sel, :s], masks[sel, :s], w)
     return out

@@ -229,8 +229,8 @@ def decontaminate(
     from .dedup import word_ngram_rows
 
     # staged gram rows (r6): word_ngram_rows stages the words array so
-    # the gram lambda binds an attribute — the inline word_ngrams form
-    # re-ran the split per gram position (see dedup.word_ngrams note)
+    # the gram lambda binds an attribute — an inline words expression
+    # re-ran the split per gram position (see dedup._ngram_array note)
     bench_grams = (
         word_ngram_rows(benchmark, text_col, None, n, gram_col="_g")
         .distinct()
@@ -238,7 +238,7 @@ def decontaminate(
     hits = (
         word_ngram_rows(df, text_col, id_col, n, gram_col="_g", out_id=id_col)
         .join(F.broadcast(bench_grams), "_g")
-        # word_ngrams is distinct within a document, so count == distinct
+        # grams are distinct within a document, so count == distinct
         .groupBy(id_col)
         .agg(F.count("_g").alias("n_hits"))
     )

@@ -51,32 +51,22 @@ def exact_dedup_keep(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
 
 def _words_expr(text_col: str):
     """The ONE word-tokenization definition shared by every gram
-    consumer (word_ngrams, word_ngram_rows — and through them d2, the
-    components row, decontaminate): lowercased split on the
-    [^a-z0-9à-ÿ']+ separator class, empty tokens dropped."""
+    consumer (word_ngram_rows — and through it d2, the components row,
+    decontaminate): lowercased split on the [^a-z0-9à-ÿ']+ separator
+    class, empty tokens dropped."""
     words = F.split(F.lower(F.col(text_col)), r"[^a-z0-9à-ÿ']+")
     return F.filter(words, lambda w: w != F.lit(""))
 
 
-def word_ngrams(text_col: str = "text", n: int = 3):
-    """Native word n-gram array: distinct n-grams as '␟'-joined strings.
-
-    PERFORMANCE (r6): only apply this to a column that already HOLDS
-    the text; never build it over a derived expression and never let
-    the words array stay inline — a transform lambda that references a
-    non-attribute outer expression re-evaluates that expression per
-    element (the split+filter ran once per gram position: measured 23x
-    — 10.9s -> 0.5s on the bench corpus — against the staged form).
-    Use :func:`word_ngram_rows` for the exploded row form, which stages
-    the words array as a real column first.
-    """
-    return _ngram_array(_words_expr(text_col), n)
-
-
 def _ngram_array(words, n: int):
-    """Distinct '␟'-joined n-grams of a words-array COLUMN. Pass a bound
-    attribute (a staged column), not a derived expression — see
-    word_ngrams' performance note."""
+    """Distinct '␟'-joined n-grams of a words-array COLUMN.
+
+    PERFORMANCE (r6): pass a bound attribute (a staged column), never a
+    derived expression — a transform lambda that references a
+    non-attribute outer expression re-evaluates that expression per
+    element (an inline split+filter ran once per gram position: measured
+    23x — 10.9s -> 0.5s on the bench corpus — against the staged form
+    :func:`word_ngram_rows` builds)."""
     idx = F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0)))
     grams = F.transform(
         idx, lambda i: F.array_join(F.slice(words, i + 1, n), "␟")
@@ -101,8 +91,8 @@ def word_ngram_rows(
     projection so the gram-building lambda references a bound attribute
     (evaluated once per row) instead of re-running the split per gram
     position — the r6 fix that took one gram pass from 10.9s to 0.5s
-    on the bench corpus. Output is identical to exploding
-    ``word_ngrams`` directly (asserted by tests/test_dedup.py)."""
+    on the bench corpus. Output equals a plain Python n-gram reference
+    (asserted by tests/test_dedup.py)."""
     ids = [F.col(id_col).alias(out_id)] if id_col is not None else []
     staged = df.select(*ids, _words_expr(text_col).alias("_ws"))
     return staged.select(
@@ -704,36 +694,21 @@ def simhash_near_pairs(
 # -------------------------------------- exact shingle-Jaccard verify tail
 
 
-def _shingle_array(text_col: str, k: int = SHINGLE_CHARS):
-    """Distinct char-k-shingles of lower(text) as a native array column.
+def _shingle_array_lowered(lowered_col: str, k: int = SHINGLE_CHARS):
+    """Distinct char-k-shingles of an ALREADY-LOWERCASED bound attribute
+    as a native array column.
 
     SQL-portable semantics (shared verbatim by the DuckDB oracle): full
     k-char windows of the lowercased text, one whole-text shingle for
     docs shorter than k chars — substr over CHARACTERS on both engines.
 
-    PERFORMANCE: prefer :func:`_shingle_array_lowered` over a STAGED
-    ``lower(text)`` column — this inline form evaluates ``lower`` both
-    in the sequence bound and inside the transform lambda (an outer
-    non-attribute expression in a lambda body is re-evaluated per
-    element), measured 2.0x slower on the bench corpus (3.28s vs 1.62s
-    per pass). Kept for API compatibility; output is identical.
-    """
-    return F.expr(
-        f"array_distinct(transform("
-        f"sequence(1, greatest(char_length(lower({text_col})) - {k - 1}, 1)), "
-        f"i -> substring(lower({text_col}), i, {k})))"
-    )
-
-
-def _shingle_array_lowered(lowered_col: str, k: int = SHINGLE_CHARS):
-    """`_shingle_array` over an ALREADY-LOWERCASED bound attribute.
-
-    The caller must stage ``lower(text)`` as a real column (a child
-    projection) so the lambda body references an attribute; staging is
-    what removes the per-element ``lower`` re-evaluation (see
-    `_shingle_array`'s performance note and `word_ngrams`' — the same
-    HOF-outer-reference pathology). Byte-identical output, asserted by
-    tests/test_dedup.py."""
+    PERFORMANCE: the caller must stage ``lower(text)`` as a real column
+    (a child projection) so the lambda body references an attribute; an
+    inline ``lower(text)`` is re-evaluated per element (the same
+    HOF-outer-reference pathology as :func:`_ngram_array`), measured
+    2.0x slower on the bench corpus (3.28s vs 1.62s per pass). Output
+    equals a plain Python shingle reference (asserted by
+    tests/test_dedup.py)."""
     return F.expr(
         f"array_distinct(transform("
         f"sequence(1, greatest(char_length({lowered_col}) - {k - 1}, 1)), "

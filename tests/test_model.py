@@ -1,5 +1,7 @@
 """Scorer determinism properties (SURVEY.md §7 hard part 2)."""
 
+import tracemalloc
+
 import numpy as np
 
 from neuscraper_spark.config import CHUNK_SIZE, NUM_CLASSES
@@ -22,18 +24,48 @@ def test_weights_deterministic():
     assert all(np.array_equal(a[k], b[k]) for k in a)
 
 
+def _sequence_rows(pages):
+    """The fixture pages' sequence rows, concatenated (~780 nodes)."""
+    return [r for c in _chunks(pages) for r in c]
+
+
 def test_batch_composition_invariance(pages):
     """A chunk's scores are identical whether scored alone or batched with
-    arbitrary other chunks — the property that makes oracle == Spark."""
+    arbitrary other chunks — the property that makes oracle == Spark.
+    The 97-384-node chunks cut from the concatenated fixture sequence
+    pin that each chunk is scored at its own trimmed length, never
+    padded to a longer batch neighbour's (which would change the inner
+    dimension of att @ v, and with it the float rounding)."""
     w = load_weights()
-    chunks = _chunks(pages[:6])
+    rows = _sequence_rows(pages)
+    assert len(rows) >= 684
+    chunks = _chunks(pages[:6]) + [
+        rows[:384], rows[384:684], rows[50:261], rows[100:197], rows[200:460], rows[7:391]
+    ]
     solo = [score_chunks([c], w)[0] for c in chunks]
     together = score_chunks(chunks, w)
+    reverse = score_chunks(chunks[::-1], w)[::-1]
     for i in range(len(chunks)):
-        assert np.array_equal(solo[i], together[i])
-    shuffled = score_chunks(chunks[::-1], w)
-    for i in range(len(chunks)):
-        assert np.array_equal(shuffled[len(chunks) - 1 - i], together[i])
+        assert np.array_equal(solo[i], together[i]), i
+        assert np.array_equal(solo[i], reverse[i]), i
+
+
+def test_score_chunks_memory_bounded(pages):
+    """Scoring ten full 384-node chunks keeps the traced peak small: the
+    attention scores are a cache-sized micro-batch, softmaxed in place,
+    not one [n, heads, 384, 384] array and its copies."""
+    w = load_weights()
+    rows = _sequence_rows(pages)
+    chunks = [rows[i : i + CHUNK_SIZE] for i in range(10)]
+    assert all(len(c) == CHUNK_SIZE for c in chunks)
+    score_chunks(chunks[:1], w)  # warm up lazy imports and BLAS buffers
+    tracemalloc.start()
+    try:
+        score_chunks(chunks, w)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < 16 << 20, peak
 
 
 def test_chunk_boundary_union_invariance(pages):

@@ -4,12 +4,15 @@ BASELINE.json targets: byte-identical extracted text per url; keep/drop
 F1 >= 0.99 vs reference labels (the oracle path, BASELINE.md).
 """
 
+import random
+
 import pandas as pd
 import pytest
 
 from neuscraper_spark import oracle
-from neuscraper_spark.corpus import gen_pages, web_pages_df
+from neuscraper_spark.corpus import WEB_PAGES_DDL, WORDS, gen_pages, web_pages_df
 from neuscraper_spark.operators.extract import (
+    extract_curate_fused,
     extract_fused,
     extract_pipeline,
     kept_nodes,
@@ -54,6 +57,36 @@ def test_partitioning_invariance(spark, oracle_extracted):
     wp1 = web_pages_df(spark, seed=SEED, n_pages=N_PAGES, partitions=1)
     got = _sorted(extract_pipeline(spark, wp1))
     pd.testing.assert_frame_equal(got, oracle_extracted)
+
+
+def _long_page(i: int, n_sentences: int, ts) -> dict:
+    """One page of ``n_sentences`` <p> sentences of 1-24 words: several
+    384-node chunks, with short nodes the scorer drops between kept ones."""
+    rng = random.Random(7919 + i)
+    words = WORDS["en"]
+    body = "".join(
+        f"<p>{' '.join(rng.choices(words, k=rng.randint(1, 24))).capitalize()}.</p>"
+        for _ in range(n_sentences)
+    )
+    html = f"<html><head><title>Long page {i}</title></head><body><main>{body}</main></body></html>"
+    url = f"https://www.long{i}.example/page.html"
+    return {"url": url, "warc_ts": ts, "html": html.encode("utf-8"), "text": "", "lang": "en"}
+
+
+def test_fused_curate_multi_chunk_pages_match_oracle(spark, pages):
+    """Pages of 400-1,000 nodes span 2-3 chunks of different lengths, so
+    the fused stage's cross-chunk keep + node order assembly runs; per
+    url its output equals the per-page oracle's."""
+    long_pages = [_long_page(i, n, pages[0]["warc_ts"]) for i, n in enumerate((400, 1000, 700))]
+    all_pages = pages + long_pages
+    df = spark.createDataFrame(pd.DataFrame(all_pages), schema=WEB_PAGES_DDL)
+    got = extract_curate_fused(spark, df).toPandas()
+    want = oracle.curate_pages(all_pages)
+    assert {p["url"] for p in long_pages} <= set(want["url"])
+    assert sorted(got["url"]) == sorted(want["url"])
+    merged = got.merge(want, on="url", suffixes=("_got", "_want"))
+    for col in ("text", "lang_pred", "quality_pass", "scrubbed_text", "toxicity_pass", "keep"):
+        assert (merged[f"{col}_got"] == merged[f"{col}_want"]).all(), col
 
 
 def test_text_nodes_match_oracle(spark, web_pages, pages):
