@@ -1,24 +1,32 @@
-"""Stdlib-HTML DOM instrumenter: html -> ordered node rows.
+"""Stdlib-HTML page parse: html -> the node rows the model sequence needs.
 
 Re-implements the reference's page-level parse on ``html.parser``
 (bs4 is unavailable here), preserving the three invariants every
 downstream operator depends on (SURVEY.md §1.b):
 
-1. **Node-ID assignment** — reverse pre-order via a LIFO stack that
-   pushes children in document order and pops last-child-first
-   (reference: src/warc/build.py:37-67, identical at app/builder.py:38-59).
-   Consequence: for any two nodes where neither is the other's ancestor,
-   *descending node_id == document order*; final text assembly sorts
-   node_id descending (src/warc/get_text.py:36).
+1. **Node-ID assignment** — the reference numbers nodes in reverse
+   pre-order via a LIFO stack that pushes children in document order
+   and pops last-child-first (reference: src/warc/build.py:37-67,
+   identical at app/builder.py:38-59). That right-to-left pre-order is
+   exactly the left-to-right post-order reversed, so a node's id is
+   ``N - 1 - post``, where ``post`` is its index in the order nodes
+   *close* in and ``N`` the page's node count. Consequence: for any two
+   nodes where neither is the other's ancestor, *descending node_id ==
+   document order*; final text assembly sorts node_id descending
+   (src/warc/get_text.py:36).
 2. **Synthetic text nodes** — bare strings are wrapped in
    ``<span instrument_node>`` and get their own id, *except* strings
    directly under an existing ``<span>`` (src/warc/build.py:54-63).
 3. **noscript exclusion** — an instrument span whose parent is
    ``<noscript>`` is not a text node (src/api/CommonCrawlApi.py:53).
 
-The per-page node graph is per-row scratch state, never a distributed
-structure: this module is pure Python and runs inside ``mapInPandas``
-batches (operators/extract.py) and inside the single-process oracle.
+There is no node graph: ``_TreeBuilder`` is one streaming pass that
+keeps only the stack of open elements, numbers nodes as they open and
+close, and emits the sequence candidates in document order. No step
+recurses, so page work and memory stay linear in the page however deep
+it nests. Everything here is per-row scratch state inside
+``mapInPandas`` batches (operators/extract.py) and the single-process
+oracle.
 
 Known divergence from bs4 (documented, corpus avoids them): comments,
 doctypes and processing instructions are dropped entirely; bs4 would
@@ -28,59 +36,137 @@ treat a Comment as a wrappable string.
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from html import unescape
 from html.parser import HTMLParser
+
+from .config import SEQ_ELEMENT_TAGS
 
 VOID_TAGS = frozenset(
     "area base br col embed hr img input link meta param source track wbr".split()
 )
+_SEQ_TAGS = frozenset(SEQ_ELEMENT_TAGS)
 
 
-class _Elem:
-    __slots__ = ("tag", "children", "parent", "node_id", "is_instrument")
+@dataclass(slots=True)
+class NodeRow:
+    """One sequence candidate: a text node, or an element whose tag is in
+    ``SEQ_ELEMENT_TAGS``. ``seq`` is its pre-order position among ALL the
+    page's nodes."""
 
-    def __init__(self, tag: str, parent: "_Elem | None"):
-        self.tag = tag
-        self.children: list[object] = []  # _Elem | str
-        self.parent = parent
-        self.node_id: int | None = None
-        self.is_instrument = False
+    seq: int
+    node_id: int
+    tag: str
+    is_text: bool
+    text: str  # full subtree text, UN-stripped (C1 strip applied downstream)
 
 
 class _TreeBuilder(HTMLParser):
+    """The streaming pass. The first element is the root; content before
+    it and after it closes is ignored. A string is a node unless its
+    parent is ``<span>``; it closes at once. A void or self-closed
+    element closes at once; any other element closes on its matching end
+    tag or at ``finish()``. ``node_id`` holds the post-order index until
+    ``finish()`` turns it into ``N - 1 - post``.
+
+    Subclasses change what a node becomes through ``_open``/``_close``
+    (elements) and ``_string``; ``self.rows`` is what ``finish()``
+    renumbers."""
+
     def __init__(self) -> None:
         super().__init__(convert_charrefs=True)
-        self.top: list[object] = []
-        self._stack: list[_Elem] = []
+        self.rows: list = []
+        self._stack: list[tuple[str, object]] = []  # open elements: (tag, payload)
+        self._open_tags: dict[str, int] = {}  # tag -> open count; absent when 0
+        self._n = 0  # nodes created = pre-order position of the next one
+        self._post = 0  # nodes closed
+        self._done = False  # the root has closed
+        self._parts: list[str] = []  # strings inside an open SEQ element
+        self._seq_open = 0
 
-    def _append(self, child: object) -> None:
-        if self._stack:
-            self._stack[-1].children.append(child)
-            if isinstance(child, _Elem):
-                child.parent = self._stack[-1]
-        else:
-            self.top.append(child)
+    # -- what a node becomes (sequence candidates) ----------------------
+
+    def _row(self, seq: int, tag: str, is_text: bool, text: str) -> NodeRow:
+        row = NodeRow(seq, -1, tag, is_text, text)
+        self.rows.append(row)
+        return row
+
+    def _open(self, seq: int, tag: str):
+        if tag not in _SEQ_TAGS:
+            return None
+        self._seq_open += 1
+        return (self._row(seq, tag, False, ""), len(self._parts))
+
+    def _close(self, payload, post: int) -> None:
+        if payload is not None:
+            row, start = payload
+            row.node_id = post
+            row.text = "".join(self._parts[start:])
+            self._seq_open -= 1
+            if not self._seq_open:
+                self._parts.clear()
+
+    def _string(self, data: str, parent: str, seq: int, post: int) -> None:
+        if self._seq_open:
+            self._parts.append(data)
+        if seq >= 0 and parent != "noscript":
+            self._row(seq, "span", True, data).node_id = post
+
+    # -- html.parser handlers -------------------------------------------
 
     def handle_starttag(self, tag: str, attrs) -> None:
-        el = _Elem(tag, None)
-        self._append(el)
-        if tag not in VOID_TAGS:
-            self._stack.append(el)
+        if self._done:
+            return
+        if tag in VOID_TAGS:
+            self.handle_startendtag(tag, attrs)
+            return
+        seq = self._n
+        self._n = seq + 1
+        self._stack.append((tag, self._open(seq, tag)))
+        self._open_tags[tag] = self._open_tags.get(tag, 0) + 1
 
     def handle_startendtag(self, tag: str, attrs) -> None:
-        self._append(_Elem(tag, None))
+        if self._done:
+            return
+        seq = self._n
+        self._n = seq + 1
+        self._close(self._open(seq, tag), self._post)
+        self._post += 1
+        self._done = not self._stack  # a void root is the whole page
 
     def handle_endtag(self, tag: str) -> None:
         # tolerant close: pop to the nearest matching open tag, else ignore
-        for i in range(len(self._stack) - 1, -1, -1):
-            if self._stack[i].tag == tag:
-                del self._stack[i:]
-                return
+        if tag in self._open_tags:
+            self._pop_to(tag)
+
+    def _pop_to(self, tag: str | None) -> None:
+        """Close open elements innermost first, through the nearest
+        ``tag`` (or all of them for None). Each element is popped once,
+        so a page's end tags cost linear work in total."""
+        stack, open_tags = self._stack, self._open_tags
+        while stack:
+            t, payload = stack.pop()
+            left = open_tags[t] - 1
+            if left:
+                open_tags[t] = left
+            else:
+                del open_tags[t]
+            self._close(payload, self._post)
+            self._post += 1
+            if t == tag:
+                break
+        self._done = not stack
 
     def handle_data(self, data: str) -> None:
-        if data and not self._drop_flush:
-            self._append(data)
+        if data and self._stack and not self._drop_flush:
+            parent = self._stack[-1][0]
+            if parent == "span":
+                self._string(data, parent, -1, -1)  # bare strings under <span> stay unwrapped
+            else:
+                seq = self._n
+                self._n = seq + 1
+                self._string(data, parent, seq, self._post)
+                self._post += 1
 
     _drop_flush = False
 
@@ -108,6 +194,14 @@ class _TreeBuilder(HTMLParser):
             super().close()
         finally:
             self._drop_flush = False
+
+    def finish(self) -> None:
+        """EOF: close what is still open, then turn post-order indices
+        into node ids."""
+        self._pop_to(None)
+        last = self._n - 1
+        for row in self.rows:
+            row.node_id = last - row.node_id
 
 
 class _Bail(Exception):
@@ -237,102 +331,28 @@ def _fast_feed(builder: _TreeBuilder, html: str) -> None:
             raise _Bail  # literal '<' data: stdlib-only path
 
 
-def _parse_tree(html: str) -> list[object]:
-    p = _TreeBuilder()
+def _parse(html: str, builder_cls: type[_TreeBuilder] = _TreeBuilder) -> _TreeBuilder:
+    """Run one streaming pass over ``html``: the fast tokenizer, or the
+    stdlib one on a fresh builder where the fast one bails."""
+    p = builder_cls()
     try:
         _fast_feed(p, html)
-        return p.top
     except _Bail:
-        p = _TreeBuilder()  # discard partial fast-path state
+        p = builder_cls()  # discard partial fast-path state
         p.feed(html)
         p.close()
-        return p.top
-
-
-def _first_element(top: list[object]) -> _Elem | None:
-    for child in top:
-        if isinstance(child, _Elem):
-            return child
-    return None
-
-
-def _instrument(root: _Elem) -> None:
-    """Assign node ids exactly like the reference's add_node_id
-    (src/warc/build.py:44-65): LIFO stack, children pushed in document
-    order, bare strings span-wrapped (except directly under <span>)."""
-    stack: list[_Elem] = [root]
-    node_index = 0
-    while stack:
-        node = stack.pop()
-        if node.node_id is not None:
-            continue
-        node.node_id = node_index
-        node_index += 1
-        for i, child in enumerate(node.children):
-            if isinstance(child, str):
-                if node.tag == "span":
-                    continue  # bare strings under <span> stay unwrapped
-                wrapper = _Elem("span", node)
-                wrapper.is_instrument = True
-                wrapper.children.append(child)
-                node.children[i] = wrapper
-                stack.append(wrapper)
-            else:
-                stack.append(child)
-
-
-def _compute_texts(root: _Elem, cache: dict[int, str]) -> str:
-    """One post-order pass: subtree text for every element (bs4 ``.text``
-    semantics: all descendant strings in document order, '' separator)."""
-    parts: list[str] = []
-    for child in root.children:
-        if isinstance(child, str):
-            parts.append(child)
-        else:
-            parts.append(_compute_texts(child, cache))
-    text = "".join(parts)
-    cache[id(root)] = text
-    return text
-
-
-@dataclass
-class NodeRow:
-    """One instrumented DOM node, in document (pre-order) position ``seq``."""
-
-    seq: int
-    node_id: int
-    tag: str
-    is_text: bool
-    text: str  # full subtree text, UN-stripped (C1 strip applied downstream)
-    __slots__ = ("seq", "node_id", "tag", "is_text", "text")
+    p.finish()
+    return p
 
 
 def parse_nodes(html: str) -> list[NodeRow]:
-    """html string -> instrumented node rows in document order.
+    """html string -> the page's sequence candidates in document order:
+    every text node (text un-stripped) and every ``SEQ_ELEMENT_TAGS``
+    element (text = its subtree's strings joined).
 
     Document order mirrors the reference's ``soup.find_all()`` iteration
     over the instrumented tree (src/api/CommonCrawlApi.py:39-79), which is
     the order the model sequence is built in (src/warc/build.py:83).
-    Returns [] for pages with no elements.
+    Returns [] for pages with no candidate.
     """
-    root = _first_element(_parse_tree(html))
-    if root is None:
-        return []
-    _instrument(root)
-    texts: dict[int, str] = {}
-    _compute_texts(root, texts)
-
-    rows: list[NodeRow] = []
-    seq = 0
-    # iterative pre-order walk over instrumented elements only
-    walk: list[_Elem] = [root]
-    while walk:
-        el = walk.pop()
-        if el.node_id is not None:
-            is_text = el.is_instrument and (el.parent is None or el.parent.tag != "noscript")
-            rows.append(NodeRow(seq, el.node_id, el.tag, is_text, texts[id(el)]))
-            seq += 1
-        walk.extend(
-            c for c in reversed(el.children) if isinstance(c, _Elem)
-        )
-    return rows
+    return _parse(html).rows

@@ -628,7 +628,15 @@ def simhash_near_pairs(
     """Near-dup pairs by Hamming distance <= max_hamming, using the
     Manku-style block trick: split the 64-bit hash into max_hamming+1
     blocks; any pair within distance shares >=1 exact block — equi-join
-    on (block_idx, block_value), then exact Hamming verify natively."""
+    on (block_idx, block_value), then exact Hamming verify natively.
+
+    Recall contract: the result is exactly the pairs whose 64-bit
+    SimHash fingerprints differ in at most ``max_hamming`` bits, and
+    nothing beyond. Text similarity is not part of the contract: a pair
+    of 36-word documents at word Jaccard 0.954 whose fingerprints are
+    10 bits apart is out of contract for ``max_hamming=8`` and is not
+    returned. Callers who need a Jaccard recall target use
+    ``minhash_lsh_pairs`` or raise ``max_hamming``."""
     sigs = simhash_signatures(df, text_col, id_col)
     n_blocks = max_hamming + 1
     width = SIMHASH_BITS // n_blocks

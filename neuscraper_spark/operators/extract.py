@@ -89,10 +89,7 @@ def _page_sequence(html_bytes: bytes, max_len: int = C.MODEL_MAX_TOKEN_LEN) -> l
     rows = []
     for node in _parse_html(html):
         stripped = strip_ws_py(node.text)
-        if node.is_text:
-            if not stripped:
-                continue
-        elif node.tag not in C.SEQ_ELEMENT_TAGS:
+        if node.is_text and not stripped:
             continue
         rows.append(
             {

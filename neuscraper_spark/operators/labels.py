@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from .. import config as C
 from ..functions.encoding import decode_html
 from ..functions.text import strip_ws_py
-from ..html_parser import _Elem, _compute_texts, _first_element, _instrument, _parse_tree
+from ..html_parser import _parse, _TreeBuilder
 from ..tokenizer import tokenize
 
 # ancestor tag -> label index (Primary via the content containers)
@@ -44,43 +44,42 @@ def _labels_from_ancestors(tags: frozenset) -> list[int]:
     ]
 
 
+class _LabelBuilder(_TreeBuilder):
+    """The streaming parse, recording each sequence candidate's labels
+    from the tags open when it is created: its ancestors, plus its own
+    tag."""
+
+    def __init__(self) -> None:
+        super().__init__()
+        self.labels: list[list[int]] = []
+
+    def _row(self, seq, tag, is_text, text):
+        self.labels.append(_labels_from_ancestors(self._open_tags.keys() | {tag}))
+        return super()._row(seq, tag, is_text, text)
+
+
 def gold_rows_for_page(html: bytes | str) -> list[dict]:
-    """Sequence-member rows with node_id, stripped text, token ids,
-    labels[6] and judgment_is_primary — one parse, document order."""
+    """Sequence-member rows with node_id, stripped text, labels[6] and
+    is_text_node — one streaming parse, document order."""
     html = decode_html(html)
     if html is None:
         return []
-    root = _first_element(_parse_tree(html))
-    if root is None:
-        return []
-    _instrument(root)
-    texts: dict[int, str] = {}
-    _compute_texts(root, texts)
-
+    parsed = _parse(html, _LabelBuilder)
     rows: list[dict] = []
-    # pre-order walk carrying the ancestor tag set
-    stack: list[tuple[_Elem, frozenset]] = [(root, frozenset())]
-    while stack:
-        el, anc = stack.pop()
-        tags = anc | {el.tag}
-        is_text = el.is_instrument and (el.parent is None or el.parent.tag != "noscript")
-        stripped = strip_ws_py(texts[id(el)])
-        member = (is_text and stripped) or (not is_text and el.tag in C.SEQ_ELEMENT_TAGS)
-        if member:
-            rows.append(
-                {
-                    "node_id": el.node_id,
-                    "text": stripped,
-                    "labels": _labels_from_ancestors(tags),
-                    # within `member`, text nodes always have non-empty
-                    # stripped text; element members need it checked —
-                    # bool(stripped) covers both (extract.py F4 form)
-                    "is_text_node": bool(stripped),
-                }
-            )
-        # reversed children + LIFO pop = document (pre-order) emission
-        stack.extend(
-            (c, tags) for c in reversed(el.children) if isinstance(c, _Elem)
+    for node, labels in zip(parsed.rows, parsed.labels):
+        stripped = strip_ws_py(node.text)
+        if node.is_text and not stripped:
+            continue
+        rows.append(
+            {
+                "node_id": node.node_id,
+                "text": stripped,
+                "labels": labels,
+                # text members always have non-empty stripped text;
+                # <ol>/<dl>/<table> members need it checked — bool(stripped)
+                # covers both (extract.py F4 form)
+                "is_text_node": bool(stripped),
+            }
         )
     return rows
 

@@ -9,8 +9,8 @@ punctuation :707-738, assembly :492-559). This path produces the
 (extract.py) concatenates with '' and is unaffected (SURVEY.md §2.9).
 
 Needs the per-page node graph (prev-node chain, parents,
-first-textnode) — built here from the same instrumented tree as
-html_parser, plus optional VDOM features (functions/vdom.py) defaulting
+first-textnode) — built here from html_parser's streaming pass (same
+nodes, same ids), plus optional VDOM features (functions/vdom.py) defaulting
 to zeros exactly like the reference's init_vdom_feature (:767-801).
 
 Replicated quirk: the reference's title-visibility check compares a tag
@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 
 from ..functions.text import strip_ws_py
 from ..functions.vdom import VDOM_FIELDS
-from ..html_parser import _Elem, _compute_texts, _first_element, _instrument, _parse_tree
+from ..html_parser import _parse, _TreeBuilder
 
 # standard HTML element categories (reference: AnnotateHtmlApi.py:15-23)
 INLINE_ELEMENT = frozenset(
@@ -62,45 +62,65 @@ class GraphNode:
     node_id: int
     tag: str
     is_textnode: bool
-    text: str  # subtree text, un-stripped
+    strings: list[str] = field(repr=False)  # the page's strings, shared by its nodes
+    start: int = 0  # the subtree's strings are strings[start:end]
+    end: int = 0
     style: str = ""
     parent: "GraphNode | None" = None
     prev_node: "GraphNode | None" = None
     first_textnode: "GraphNode | None" = None
     vdom: Vdom = field(default_factory=Vdom)
 
+    @property
+    def text(self) -> str:
+        """Subtree text, un-stripped. Joined when read, so a page nested
+        n deep does not hold n overlapping copies of its text."""
+        return "".join(self.strings[self.start : self.end])
+
+
+class _GraphBuilder(_TreeBuilder):
+    """The streaming parse, keeping every node as a GraphNode in
+    document order (``rows``), with parent and prev-node links."""
+
+    def __init__(self) -> None:
+        super().__init__()
+        self.title: GraphNode | None = None
+        self._strings: list[str] = []  # every string inside the root
+
+    def _node(self, tag, is_textnode) -> GraphNode:
+        g = GraphNode(
+            node_id=-1,
+            tag=tag,
+            is_textnode=is_textnode,
+            strings=self._strings,
+            start=len(self._strings),
+            parent=self._stack[-1][1] if self._stack else None,
+            prev_node=self.rows[-1] if self.rows else None,
+        )
+        self.rows.append(g)
+        return g
+
+    def _open(self, seq, tag):
+        g = self._node(tag, False)
+        if tag == "title" and self.title is None:
+            self.title = g
+        return g
+
+    def _close(self, g, post):
+        g.node_id = post
+        g.end = len(self._strings)
+
+    def _string(self, data, parent, seq, post):
+        if seq >= 0:
+            g = self._node("span", parent != "noscript")
+            g.node_id, g.end = post, g.start + 1
+        self._strings.append(data)
+
 
 def build_graph(html: str, vdom_by_node: dict[int, Vdom] | None = None):
     """html -> (doc-order GraphNode list, title node or None)."""
-    root = _first_element(_parse_tree(html))
-    if root is None:
-        return [], None
-    _instrument(root)
-    texts: dict[int, str] = {}
-    _compute_texts(root, texts)
-
-    nodes: list[GraphNode] = []
-    by_elem: dict[int, GraphNode] = {}
-    title = None
-    stack = [root]
-    prev: GraphNode | None = None
-    while stack:
-        el = stack.pop()
-        g = GraphNode(
-            node_id=el.node_id,
-            tag=el.tag,
-            is_textnode=el.is_instrument
-            and (el.parent is None or el.parent.tag != "noscript"),
-            text=texts[id(el)],
-            parent=by_elem.get(id(el.parent)) if el.parent else None,
-            prev_node=prev,
-        )
-        by_elem[id(el)] = g
-        nodes.append(g)
-        if el.tag == "title" and title is None:
-            title = g
-        prev = g
-        stack.extend(c for c in reversed(el.children) if isinstance(c, _Elem))
+    parsed = _parse(html, _GraphBuilder)
+    nodes, title = parsed.rows, parsed.title
 
     # first_textnode per node (reference compute_node_relationship:
     # children resolve before parents; a parent's first_textnode is its

@@ -9,11 +9,13 @@ match it byte-for-byte per url, and keep/drop F1 vs its labels must be
 >= 0.99 (trivially 1.0 when byte-identical — asserted the hard way in
 tests/test_pipeline.py).
 
-It deliberately shares the leaf functions (html_parser.parse_nodes,
+It deliberately shares the leaf functions (the page -> sequence walk
+extract._page_sequence over html_parser.parse_nodes' streaming pass,
 tokenizer.tokenize, model.score_chunks, quality *_py twins) with the
 Spark operators — the thing under test is the *distributed plan*
 (shuffles, aggregation order, Arrow round-trips, broadcast), not the
-leaf math.
+leaf math. The parser itself is checked against the full instrumented
+tree of the reference in tests/tree_reference.py.
 """
 
 from __future__ import annotations

@@ -3,6 +3,7 @@ src/warc/build.py:37-67 and src/api/CommonCrawlApi.py:39-130."""
 
 from neuscraper_spark.functions.text import strip_ws_py
 from neuscraper_spark.html_parser import parse_nodes
+from tests.tree_reference import candidate_rows, stream_rows, tree_rows
 
 
 HTML = (
@@ -13,8 +14,12 @@ HTML = (
 
 
 def test_root_gets_id_zero():
-    rows = parse_nodes(HTML)
-    assert rows[0].tag == "html" and rows[0].node_id == 0
+    # the reference tree numbers the root 0; parse_nodes returns the root
+    # only when it is a sequence element, and then with id 0
+    assert tree_rows(HTML)[0][1:3] == (0, "html")
+    assert stream_rows(HTML) == candidate_rows(HTML)
+    rows = parse_nodes("<table><tr><td>x</td></tr></table><p>after</p>")
+    assert (rows[0].tag, rows[0].node_id) == ("table", 0)
 
 
 def test_reverse_preorder_ids():
@@ -27,16 +32,21 @@ def test_reverse_preorder_ids():
 
 
 def test_bare_string_under_span_not_wrapped():
-    rows = parse_nodes(HTML)
-    inline = [r for r in rows if r.text == "inline"]
-    # the pre-existing <span> itself is not an instrument node
-    assert all(not r.is_text for r in inline)
+    # in the reference tree "inline" is only the pre-existing <span>'s
+    # text: no instrument span was made for it, so it is no text node
+    ref = [r for r in tree_rows(HTML) if r[4] == "inline"]
+    assert [(tag, is_text) for _, _, tag, is_text, _ in ref] == [("span", False)]
+    assert not [r for r in parse_nodes(HTML) if r.text == "inline"]
+    assert stream_rows(HTML) == candidate_rows(HTML)
 
 
 def test_noscript_excluded():
-    rows = parse_nodes(HTML)
-    ns = [r for r in rows if r.text == "NS" and r.tag == "span"]
-    assert ns and not ns[0].is_text
+    # the reference wraps the string under <noscript> in an instrument
+    # span that is not a text node; it takes an id but is no candidate
+    ref = [r for r in tree_rows(HTML) if r[4] == "NS" and r[2] == "span"]
+    assert len(ref) == 1 and not ref[0][3]
+    assert not [r for r in parse_nodes(HTML) if r.text == "NS"]
+    assert stream_rows(HTML) == candidate_rows(HTML)
 
 
 def test_element_text_is_subtree_concat():
@@ -57,8 +67,11 @@ def test_strip_charset_exact():
 
 
 def test_malformed_html_tolerated():
-    rows = parse_nodes("<html><body><p>a<div>b</p>c</div></body></html>")
-    assert rows and rows[0].node_id == 0
+    html = "<html><body><p>a<div>b</p>c</div></body></html>"
+    # </p> closes the <div> opened inside it; "c" lands under <body>
+    assert [(r.text, r.node_id) for r in parse_nodes(html)] == [("a", 6), ("b", 5), ("c", 2)]
+    assert tree_rows(html)[0][1] == 0
+    assert stream_rows(html) == candidate_rows(html)
 
 
 def test_empty_input():
@@ -66,40 +79,17 @@ def test_empty_input():
     assert parse_nodes("just text, no tags") == []
 
 
-# ---------------------------------------------------------- r6 fast tokenizer
+# ------------------------------------- streaming pass vs the tree reference
 
 
-def _stdlib_rows(html: str):
-    """parse_nodes with the fast tokenizer bypassed (pure stdlib path)."""
-    import neuscraper_spark.html_parser as H
-
-    p = H._TreeBuilder()
-    p.feed(html)
-    p.close()
-    top = p.top
-    root = H._first_element(top)
-    if root is None:
-        return []
-    H._instrument(root)
-    texts = {}
-    H._compute_texts(root, texts)
-    rows = []
-    seq = 0
-    walk = [root]
-    while walk:
-        el = walk.pop()
-        if el.node_id is not None:
-            is_text = el.is_instrument and (
-                el.parent is None or el.parent.tag != "noscript"
-            )
-            rows.append((seq, el.node_id, el.tag, is_text, texts[id(el)]))
-            seq += 1
-        walk.extend(c for c in reversed(el.children) if isinstance(c, H._Elem))
-    return rows
-
-
-def _as_tuples(rows):
-    return [(r.seq, r.node_id, r.tag, r.is_text, r.text) for r in rows]
+def assert_matches_reference(html: str) -> None:
+    """parse_nodes == the reference tree's sequence candidates, row for
+    row, crossing the tokenizers: the streaming pass fast-or-bail against
+    the reference on the stdlib tokenizer, and the streaming pass on the
+    stdlib tokenizer against the reference fast-or-bail."""
+    for stdlib_only in (False, True):
+        assert stream_rows(html, stdlib_only) == candidate_rows(html, not stdlib_only), (
+            html[:200], stdlib_only)
 
 
 def test_fast_tokenizer_equivalent_on_corpus():
@@ -108,14 +98,30 @@ def test_fast_tokenizer_equivalent_on_corpus():
     from neuscraper_spark.corpus import gen_pages
 
     for p in gen_pages(7, 60):
-        html = p["html"].decode()
-        assert _as_tuples(parse_nodes(html)) == _stdlib_rows(html)
+        assert_matches_reference(p["html"].decode())
+
+
+HAND_CASES = [
+    "<br>void root<p>ignored</p>",
+    "text before the root<p>a</p>text after",
+    "<table/>",
+    "<table/><p>after a self-closed root</p>",
+    "<ol><li>a<ol><li>b</ol>c</ol>d",
+    "<dl><dt>t<dd>d</dl><table><tr><td>1<td>2</table>",
+    "<div><span>in</span><noscript>ns<b>x</b></noscript></div>",
+    "<div><span>a<b>b</b>c</span></div>",
+    "<div><![CDATA[z]]><?pi data?><!-- c -->t</div>",
+    "<p>a<p>b<p>c",
+    "<ol>x",
+    "<div>a</div><p>after</p>",
+    "<html><body><ol><li>x</ol></ol></body></html><ol><li>outside</ol>",
+]
 
 
 def test_fast_tokenizer_equivalent_or_bails_on_edge_cases():
     """On constructs outside the strict subset the fast path must BAIL
     (fall back to stdlib) rather than diverge; on accepted input it
-    must match. Either way parse_nodes == the stdlib result."""
+    must match. Either way parse_nodes == the reference."""
     cases = [
         "<html><body>a &amp; b &lt;tag&gt; &nbsp;x</body></html>",
         "<html><body>a < b and c<d</body></html>",              # literal '<'
@@ -134,13 +140,13 @@ def test_fast_tokenizer_equivalent_or_bails_on_edge_cases():
         "<html><body><p>tail&amp",                               # entity at EOF
         "<html><body><noscript><p>n</p></noscript></body></html>",
     ]
-    for html in cases:
-        assert _as_tuples(parse_nodes(html)) == _stdlib_rows(html), html
+    for html in cases + HAND_CASES:
+        assert_matches_reference(html)
 
 
 def test_fast_tokenizer_fuzz_equivalence():
     """Random mutations of corpus pages: every page parses to the same
-    rows via parse_nodes (fast-or-bail) and the forced stdlib path."""
+    rows via parse_nodes (fast-or-bail) and the reference."""
     import random
 
     from neuscraper_spark.corpus import gen_pages
@@ -151,5 +157,33 @@ def test_fast_tokenizer_fuzz_equivalence():
         html = p["html"].decode()
         for _ in range(4):
             i = rng.randrange(len(html))
-            mutated = html[:i] + rng.choice(frags) + html[i:]
-            assert _as_tuples(parse_nodes(mutated)) == _stdlib_rows(mutated)
+            assert_matches_reference(html[:i] + rng.choice(frags) + html[i:])
+
+
+def test_stream_matches_reference_on_long_pages_and_mutants():
+    """Long multi-chunk pages carrying the constructs that send a page
+    to the stdlib tokenizer, and seeded mutants of corpus pages."""
+    import random
+
+    from neuscraper_spark.corpus import WORDS, gen_pages
+    from tests.test_html_fuzz import _mutate
+
+    rng = random.Random(11)
+    bail = ["<p>x &lt; 10 and x < y</p>", "<p>raw <![CDATA[ payload ]]> end</p>",
+            "<p>note</p><!-- unterminated comment"]
+    for i in range(12):
+        blocks = []
+        for _ in range(300):
+            s = " ".join(rng.choices(WORDS["en"], k=rng.randint(1, 12)))
+            r = rng.random()
+            if r < 0.7:
+                blocks.append(f"<p>{s}</p>")
+            elif r < 0.85:
+                blocks.append(f"<ol><li>{s}<li><span>{s}</span></ol>")
+            else:
+                blocks.append(f"<table><tr><td>{s}</td><td><b>{i}</b></td></tr></table>")
+        blocks.insert(rng.randrange(len(blocks)), bail[i % 3])
+        assert_matches_reference(
+            "<html><head><title>t</title></head><body><main>" + "\n".join(blocks) + "</main></body></html>")
+    for p in gen_pages(21, 100):
+        assert_matches_reference(_mutate(p["html"].decode(), rng))

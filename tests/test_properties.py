@@ -10,6 +10,7 @@ from neuscraper_spark.html_parser import parse_nodes
 from neuscraper_spark.model import tensorize_chunk
 from neuscraper_spark.operators.quality import heuristics_py, langid_scores_py, pii_scrub_py, ppl_py
 from neuscraper_spark.tokenizer import tokenize
+from tests.tree_reference import candidate_rows, tree_rows
 
 text_st = st.text(max_size=300)
 
@@ -56,8 +57,10 @@ def test_parser_never_crashes(s):
     rows = parse_nodes(s)
     ids = [r.node_id for r in rows]
     assert len(ids) == len(set(ids))  # ids unique
-    if rows:
-        assert rows[0].node_id == 0  # root always id 0
+    ref = tree_rows(s)
+    if ref:
+        assert ref[0][1] == 0  # root always id 0
+    assert [(r.seq, r.node_id, r.tag, r.is_text, r.text) for r in rows] == candidate_rows(s)
 
 
 @settings(max_examples=50, deadline=2000)

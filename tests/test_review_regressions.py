@@ -109,9 +109,7 @@ def test_fast_tokenizer_bails_on_nonascii_tag_whitespace():
     a \\s-based fast pattern silently parsed '<p\\x0bid=x>' as tag 'p'
     while stdlib sees tag 'p\\x0bid=x'. The fast path must now bail and
     match stdlib on every such input."""
-    from tests.test_parser import _as_tuples, _stdlib_rows
-
-    from neuscraper_spark.html_parser import parse_nodes
+    from tests.test_parser import assert_matches_reference
 
     cases = [
         "<html><body><p\x0bid=x>text</p></body></html>",
@@ -123,7 +121,7 @@ def test_fast_tokenizer_bails_on_nonascii_tag_whitespace():
         "<html><body><p a=1\xa0b=2>t</p></body></html>",
     ]
     for html in cases:
-        assert _as_tuples(parse_nodes(html)) == _stdlib_rows(html), repr(html)
+        assert_matches_reference(html)
 
 
 def test_cdata_close_matches_running_interpreter():
@@ -132,16 +130,16 @@ def test_cdata_close_matches_running_interpreter():
     is not a strict full end tag (older-interpreter pattern)."""
     from html.parser import HTMLParser
 
-    from tests.test_parser import _as_tuples, _stdlib_rows
+    from tests.test_parser import assert_matches_reference
 
-    from neuscraper_spark.html_parser import _CDATA_CLOSE, parse_nodes
+    from neuscraper_spark.html_parser import _CDATA_CLOSE
 
     probe = HTMLParser(convert_charrefs=True)
     probe.set_cdata_mode("script")
     assert _CDATA_CLOSE["script"][0].pattern == probe.interesting.pattern
     # content containing a lookalike end tag must chunk identically
     html = '<html><body><script>var s="</scripty>";</script><p>x</p></body></html>'
-    assert _as_tuples(parse_nodes(html)) == _stdlib_rows(html)
+    assert_matches_reference(html)
 
 
 def test_minhash_bucket_rows_carry_no_signatures(spark):
