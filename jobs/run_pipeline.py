@@ -176,8 +176,8 @@ def main() -> None:
     web_pages = spark.read.parquet(args.input)
     if args.partitions:
         web_pages = web_pages.repartition(args.partitions)
-    # ONE python stage (parse+score+assemble+langid+ppl fused) + native
-    # tail — byte-identical to the staged plan (tested)
+    # ONE python stage (parse+score+assemble+the whole quality chain),
+    # byte-identical to the staged plan (tested)
     curated = extract_curate_fused(spark, web_pages, threshold=thr)
     if (args.dedup_urls or args.repetition_filter or args.near_dup is not None
             or args.substring_dedup is not None):

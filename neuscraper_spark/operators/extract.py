@@ -39,7 +39,10 @@ Scale notes (100 TB design):
 assemble per page inside one mapInPandas (the reference's
 embarrassingly-parallel Pool(64) topology, src/warc/build.py:192-193) —
 used when no per-stage materialization is needed; plans are verified
-equal by tests/test_pipeline.py.
+equal by tests/test_pipeline.py. ``extract_curate_fused``, the
+production plan, runs the whole quality chain (``quality.curate_batch``)
+in the same worker, so the plan is that one Python stage with no
+Catalyst expression after it.
 """
 
 from __future__ import annotations
@@ -258,14 +261,48 @@ def extract_fused(
     the NumPy forward pass sees full micro-batches — the same batching
     economy as the reference's DataLoader(batch_size=256).
 
-    ``with_langid_ppl=True`` folds the quality chain's python models
-    into the same worker (one python stage per task instead of two
-    chained ones — less worker oversubscription at high parallelism);
-    follow with quality.with_heuristics/with_pii_scrub/with_keep.
+    ``with_langid_ppl=True`` also appends langid and perplexity
+    (``quality.LANGID_PPL_DDL``) in the same worker; the whole quality
+    chain in one worker is ``extract_curate_fused``.
     """
+    if not with_langid_ppl:
+        return _fused_stage(spark, web_pages, threshold)
+    from .quality import LANGID_PPL_DDL, langid_ppl_batch
+
+    return _fused_stage(spark, web_pages, threshold, langid_ppl_batch, LANGID_PPL_DDL, ppl_tables)
+
+
+def extract_curate_fused(
+    spark: SparkSession,
+    web_pages: DataFrame,
+    threshold: float = C.PRIMARY_THRESHOLD,
+    ppl_tables=None,
+) -> DataFrame:
+    """The whole flagship as ONE python stage: parse, score, assemble,
+    then ``quality.curate_batch`` (langid, perplexity, heuristics, PII
+    scrub, toxicity, keep) in the same worker, with no Catalyst
+    expression after it. Byte-identical to
+    quality_chain(extract_pipeline(...)), whose tail is Catalyst-native —
+    asserted on all columns in tests."""
+    from .quality import CURATE_DDL, curate_batch
+
+    return _fused_stage(spark, web_pages, threshold, curate_batch, CURATE_DDL, ppl_tables)
+
+
+def _fused_stage(
+    spark: SparkSession,
+    web_pages: DataFrame,
+    threshold: float,
+    kernel=None,
+    kernel_ddl: str = "",
+    ppl_tables=None,
+) -> DataFrame:
+    """The fused mapInPandas stage: (url, text) per page with output,
+    plus the columns ``kernel(texts, ppl_tables)`` returns, typed by
+    ``kernel_ddl``."""
     bc = _weights_broadcast(spark)
     thr = float(threshold)
-    if with_langid_ppl:
+    if kernel is not None:
         from .quality import _ppl_tables
 
         bc_ppl = spark.sparkContext.broadcast(
@@ -274,9 +311,7 @@ def extract_fused(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         w = shm_cache_weights(bc.value, tag=C.WEIGHTS_TAG)
-        if with_langid_ppl:
-            from .quality import langid_scores_batch, ppl_batch
-
+        if kernel is not None:
             tables = bc_ppl.value
         for pdf in batches:
             page_rows = [(u, _page_sequence(h)) for u, h in zip(pdf["url"], pdf["html"])]
@@ -323,37 +358,11 @@ def extract_fused(
                 "".join(flat_text[i] for i in order[s:e])
                 for s, e in zip(starts, ends)
             ]
-            out = pd.DataFrame({"url": urls, "text": texts})
-            if with_langid_ppl:
-                langs, confs = langid_scores_batch(texts)
-                out["lang_pred"] = langs
-                out["lang_conf"] = confs
-                out["ppl"] = ppl_batch(texts, tables)
-            yield out
+            cols = kernel(texts, tables) if kernel is not None else {}
+            yield pd.DataFrame({"url": urls, "text": texts, **cols})
 
-    schema = EXTRACTED_DDL
-    if with_langid_ppl:
-        schema += ", lang_pred string, lang_conf double, ppl double"
+    schema = EXTRACTED_DDL + (", " + kernel_ddl if kernel is not None else "")
     return web_pages.select("url", "html").mapInPandas(run, schema=schema)
-
-
-def extract_curate_fused(
-    spark: SparkSession,
-    web_pages: DataFrame,
-    threshold: float = C.PRIMARY_THRESHOLD,
-    ppl_tables=None,
-) -> DataFrame:
-    """The whole flagship as ONE python stage + native tail: parse,
-    score, assemble, langid, perplexity in the same worker; heuristics,
-    PII scrub and keep stay Catalyst-native. Byte-identical to
-    quality_chain(extract_pipeline(...)) — asserted in tests."""
-    from .quality import with_heuristics, with_keep, with_pii_scrub
-
-    df = extract_fused(
-        spark, web_pages, threshold=threshold,
-        with_langid_ppl=True, ppl_tables=ppl_tables,
-    )
-    return with_keep(with_pii_scrub(with_heuristics(df)))
 
 
 # ------------------------------------------------------- parity-shaped views

@@ -5,19 +5,27 @@ heuristic rules, and regex PII/toxicity scrubbing — none of which exist
 in the reference (nearest analogue: the pycld2 en-filter at
 src/warc/build.py:133-142); all built from public-knowledge designs.
 
-Every stage is a pure ``DataFrame -> DataFrame`` function. Heuristics
-and scrubbing are Catalyst-native expressions (zero Python in the hot
-path); langid and perplexity run together in one ``mapInPandas`` stage
-(``with_langid_ppl``, or folded into ``extract.extract_fused``) over
-broadcast model tables. Each has a ``*_py`` twin with identical
-semantics used by the single-process oracle (oracle.py) — property
-tests assert twin agreement.
+The hot path is ``curate_batch``: every column of the chain (langid,
+perplexity, heuristics, PII scrub, toxicity, keep) for a batch of texts,
+in Python, run by ``extract.extract_curate_fused`` inside the fused
+worker and by the single-process oracle (oracle.py). Its PII and
+toxicity regexes run only behind exact necessary-condition gates.
+
+The same chain also exists as ``DataFrame -> DataFrame`` stages for the
+staged ``quality_chain`` and the DuckDB-checked queries: langid and
+perplexity in one ``mapInPandas`` stage (``with_langid_ppl``) over
+broadcast model tables, heuristics and scrubbing as Catalyst-native
+expressions (``with_heuristics``, ``with_pii_scrub``, ``with_keep``).
+Tests assert that the kernel and the Catalyst forms agree on every
+column.
 """
 
 from __future__ import annotations
 
 import math
 import re
+import unicodedata
+from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
 from pyspark.sql import Column, DataFrame
@@ -206,11 +214,15 @@ def ppl_batch(texts, tables=None) -> list[float]:
     bigram count/unigram-prev if the pair was seen, else
     BACKOFF * unigram/total if the token was seen, else BACKOFF * floor.
     """
+    return _ppl_tokens([_WORD_RE.findall((t or "").lower()) for t in texts], tables)
+
+
+def _ppl_tokens(tok_lists, tables=None) -> list[float]:
+    """ppl_batch over texts already split into lowered ``_WORD_RE`` tokens."""
     tables = tables if tables is not None else _ppl_tables()
     vec = _ppl_vec(tables)
-    tok_lists = [_WORD_RE.findall((t or "").lower()) for t in texts]
     lens = np.array([len(tl) for tl in tok_lists], dtype=np.int64)
-    out = np.full(len(texts), float(10**9))
+    out = np.full(len(tok_lists), float(10**9))
     flat = [t for tl in tok_lists for t in tl]
     if flat:
         uniq, inv = np.unique(np.array(flat), return_inverse=True)
@@ -227,7 +239,7 @@ def ppl_batch(texts, tables=None) -> list[float]:
             PPL_BACKOFF * vec.floor,
         )
         if len(ids) > 1:
-            seg = np.repeat(np.arange(len(texts)), lens)
+            seg = np.repeat(np.arange(len(tok_lists)), lens)
             # pair targets: not the first token of a text, both ids known
             pair = (seg[1:] == seg[:-1]) & known[1:] & known[:-1]
             idx = np.nonzero(pair)[0] + 1
@@ -245,7 +257,7 @@ def ppl_batch(texts, tables=None) -> list[float]:
                 p[idx[has]] = bcnt[has] / vec.ucnt[prev[has]]
         logp = np.log(p)
         starts = np.concatenate(([0], np.cumsum(lens)))
-        for i in range(len(texts)):
+        for i in range(len(tok_lists)):
             if lens[i]:
                 out[i] = math.exp(
                     -logp[starts[i] : starts[i + 1]].sum() / lens[i]
@@ -258,9 +270,9 @@ def ppl_py(text: str, tables=None) -> float:
 
 
 # --------------------------------------------------------------------------
-# F11 [north-rule] — C4/Gopher-style heuristic rules, pure Catalyst.
+# F11 [north-rule] — C4/Gopher-style heuristic rules, Catalyst form.
 # Public sources: Raffel et al. 2020 (C4), Rae et al. 2021 (Gopher §A1.1).
-# Thresholds live here so the oracle twin shares them.
+# Thresholds live here so curate_batch shares them.
 # --------------------------------------------------------------------------
 
 RULES = {
@@ -284,8 +296,9 @@ RULES = {
 # per-character union lambdas evaluated per input char — measured ~50s
 # of cold-JIT cost on the flagship tail (re-paid per fresh codegen
 # class) vs milliseconds for the property form. The PYTHON side must
-# use the explicit class (Python \\s additionally matches \\x1c-\\x1f,
-# which White_Space does not; explicit classes are bitmap-fast there).
+# not use \\s or a bare str.split(): both also split on \\x1c-\\x1f, which
+# White_Space does not (curate_batch falls back to WS_RE when a text
+# holds one of them).
 WS_CHARS = (
     " \t\n\r\f\x0b\x85\xa0\u1680"
     "\u2000\u2001\u2002\u2003\u2004\u2005\u2006\u2007\u2008\u2009\u200a"
@@ -315,17 +328,9 @@ JAVA_STOPWORD_RE = (
 
 # word-with-a-letter matcher: non-whitespace tokens can't cross
 # whitespace, so non-overlapping matches == words containing >=1 letter
-# (both engines leftmost-greedy). Lets alpha_words be ONE
-# regexp_extract_all instead of a lambda filter over the split array.
-# Java form uses (?U)\S (see WS_CHARS note); Python form the class.
-ALPHA_WORD_RE = "[^" + WS_CHARS + "]*[A-Za-zÀ-ÿ][^" + WS_CHARS + "]*"
+# (leftmost-greedy). Lets alpha_words be ONE regexp_extract_all instead
+# of a lambda filter over the split array. (?U)\S: see the WS_CHARS note.
 JAVA_ALPHA_WORD_RE = r"(?U)\S*[A-Za-zÀ-ÿ]\S*"
-
-
-def _words(col: Column) -> Column:
-    """Word array (twin of the Python split) — TEST/ORACLE surface only;
-    the hot path below never materializes it."""
-    return F.filter(F.split(col, WS_RE), lambda w: w != F.lit(""))
 
 
 def with_heuristics(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -346,7 +351,7 @@ def with_heuristics(df: DataFrame, text_col: str = "text") -> DataFrame:
         computed with plain split/regexp_replace/regexp_extract_all:
           n_words     = size(split(trim_ws(text)))        (0 when empty)
           total_chars = length(text with all ws removed)  (== Σ|word|)
-          alpha_words = count of ALPHA_WORD_RE matches
+          alpha_words = count of JAVA_ALPHA_WORD_RE matches
         Stopword hits use one bounded-alternation regex scan
         (JAVA_STOPWORD_RE) instead of materializing the token array —
         see the constant's comment for the equivalence argument and the
@@ -427,45 +432,10 @@ def with_heuristics(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.drop("_words", "_total_chars", "_n_symbols", "_alpha_words", "_stop_hits")
 
 
-def heuristics_py(text: str) -> dict:
-    """Python twin of with_heuristics (same thresholds, same formulas).
-
-    Word stats mirror the Column formulas exactly; tests additionally
-    pin that they equal the split-array definitions (n_words == number
-    of non-empty split tokens, total_chars == Σ|word|, alpha_words ==
-    words containing a letter)."""
-    text = text or ""
-    words = [w for w in re.split(WS_RE, text) if w]
-    n_words = len(words)
-    total_chars = len(re.sub(WS_RE, "", text))
-    mean_wl = total_chars / max(n_words, 1)
-    n_symbols = len(re.findall(SYMBOL_RE, text))
-    alpha_words = len(re.findall(ALPHA_WORD_RE, text))
-    toks = set(re.split(r"[^a-zà-ÿ']+", (text or "").lower()))
-    stop_hits = sum(1 for s in STOPWORDS if s in toks)
-    r = RULES
-    out = {
-        "n_words": n_words,
-        "mean_word_len": round(mean_wl, 4),
-        "rule_word_count": r["min_words"] <= n_words <= r["max_words"],
-        "rule_mean_word_len": r["min_mean_word_len"] <= mean_wl <= r["max_mean_word_len"],
-        "rule_symbol_ratio": float(n_symbols) <= r["max_symbol_word_ratio"] * max(n_words, 1),
-        "rule_alpha_ratio": float(alpha_words) >= r["min_alpha_word_ratio"] * max(n_words, 1),
-        "rule_stopwords": stop_hits >= r["min_stopword_hits"],
-    }
-    out["quality_pass"] = all(
-        out[k] for k in (
-            "rule_word_count", "rule_mean_word_len", "rule_symbol_ratio",
-            "rule_alpha_ratio", "rule_stopwords",
-        )
-    )
-    return out
-
-
 # --------------------------------------------------------------------------
-# F10 [north-rule] — PII scrub + toxicity flag, pure Catalyst.
+# F10 [north-rule] — PII scrub + toxicity flag, Catalyst form.
 # Pattern strings are written to the common subset of Java and Python
-# regex so the oracle twin is byte-compatible.
+# regex so curate_batch is byte-compatible.
 # --------------------------------------------------------------------------
 
 PII_PATTERNS: tuple[tuple[str, str, str], ...] = (
@@ -500,21 +470,6 @@ def with_pii_scrub(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def pii_scrub_py(text: str) -> dict:
-    scrubbed = text or ""
-    pii_count = 0
-    for _, pat, repl in PII_PATTERNS:
-        pii_count += len(re.findall(pat, text or ""))
-        scrubbed = re.sub(pat, repl, scrubbed)
-    toxic_hits = len(re.findall(_TOXIC_RE, text or ""))
-    return {
-        "scrubbed_text": scrubbed,
-        "pii_count": pii_count,
-        "toxic_hits": toxic_hits,
-        "toxicity_pass": toxic_hits == 0,
-    }
-
-
 # --------------------------------------------------------------------------
 # keep/drop combiner
 # --------------------------------------------------------------------------
@@ -537,6 +492,173 @@ def keep_py(lang_pred: str, quality_pass: bool, toxicity_pass: bool, ppl: float)
     return (lang_pred in KEEP_LANGS) and quality_pass and toxicity_pass and ppl <= PPL_MAX
 
 
+# --------------------------------------------------------------------------
+# The curation kernel: langid, perplexity, heuristics, PII scrub,
+# toxicity and keep for a batch of texts, one pass per text in Python.
+# extract.extract_curate_fused runs it in the fused worker and
+# oracle.curate_pages over the extracted pages; heuristics_py and
+# pii_scrub_py wrap it. Its output equals the Column forms above, which
+# the staged quality_chain and the DuckDB-checked queries run, so the
+# fused-vs-staged tests check it against Java's regex engine.
+# --------------------------------------------------------------------------
+
+HEURISTIC_COLUMNS = (
+    "n_words", "mean_word_len", "rule_word_count", "rule_mean_word_len",
+    "rule_symbol_ratio", "rule_alpha_ratio", "rule_stopwords", "quality_pass",
+)
+SCRUB_COLUMNS = ("scrubbed_text", "pii_count", "toxic_hits", "toxicity_pass")
+CURATE_COLUMNS = ("lang_pred", "lang_conf", "ppl") + HEURISTIC_COLUMNS + SCRUB_COLUMNS + ("keep",)
+LANGID_PPL_DDL = "lang_pred string, lang_conf double, ppl double"
+CURATE_DDL = LANGID_PPL_DDL + (
+    ", n_words int, mean_word_len double, rule_word_count boolean, "
+    "rule_mean_word_len boolean, rule_symbol_ratio boolean, rule_alpha_ratio boolean, "
+    "rule_stopwords boolean, quality_pass boolean, scrubbed_text string, "
+    "pii_count int, toxic_hits int, toxicity_pass boolean, keep boolean"
+)
+
+# str.split() also splits on \x1c-\x1f, which are not White_Space; a
+# text holding one of them splits on WS_RE instead.
+_SPLIT_EXTRA = "\x1c\x1d\x1e\x1f"
+_WS_SPLIT_RE = re.compile(WS_RE)
+# a whitespace char, then a whole word with no [A-Za-zÀ-ÿ] letter: run
+# over " " + text, its matches are the words JAVA_ALPHA_WORD_RE does
+# not count
+_NON_ALPHA_WORD_RE = re.compile("[" + WS_CHARS + "][^" + WS_CHARS + "A-Za-zÀ-ÿ]+(?![^" + WS_CHARS + "])")
+_STOPWORD_SET = frozenset(STOPWORDS)
+_ROUND4 = Decimal("0.0001")
+_PII_RES = tuple((re.compile(pat), repl) for _, pat, repl in PII_PATTERNS)
+_TOXIC_PY_RE = re.compile(_TOXIC_RE)
+# Exact necessary condition for a PII match: every email match holds
+# '@', and every ssn/cc/phone/ipv4 match a digit followed by ' ', '.'
+# or '-'.
+_DIGIT_SEP_RE = re.compile(r"[0-9][ .\-]")
+_NON_ASCII_RUN_RE = re.compile(r"[^\x00-\x7f]+")
+_LETTER_OR_DIGIT = frozenset(("Lu", "Ll", "Lt", "Lm", "Lo", "Nd"))
+
+
+def _java_word_view(text: str) -> str:
+    """``text`` as Java's regex engine sees it at a word boundary.
+
+    The PII and toxicity patterns match ASCII characters only; outside
+    them a character matters only through ``\\b``. Java (JDK 17) counts
+    a letter, a decimal digit, '_', or a non-spacing mark whose base is
+    a letter or digit as a word character; Python counts every
+    ``isalnum()`` character ('½', '²', 'Ⅷ') but no mark. So each
+    non-ASCII character becomes 'é' where Java sees a word character and
+    NBSP where it does not, and the patterns run on this view with
+    Java's boundaries. Neither stand-in folds to an ASCII letter, so
+    Python's ``(?i)`` then folds ASCII only, as Java's does ('ſ' is not
+    's'). ASCII characters and all positions are unchanged."""
+    if text.isascii():
+        return text
+    parts, pos = [], 0
+    for m in _NON_ASCII_RUN_RE.finditer(text):
+        start = m.start()
+        parts.append(text[pos:start])
+        base = start > 0 and text[start - 1].isalnum()
+        for c in m.group():
+            cat = unicodedata.category(c)
+            if cat != "Mn":
+                base = cat in _LETTER_OR_DIGIT
+            parts.append("é" if base else "\xa0")
+        pos = m.end()
+    parts.append(text[pos:])
+    return "".join(parts)
+
+
+def _java_sub(rx: re.Pattern, repl: str, text: str) -> str:
+    """``rx.sub(repl, text)`` with Java's word boundaries."""
+    view = _java_word_view(text)
+    if view is text:
+        return rx.sub(repl, text)
+    parts, pos = [], 0
+    for m in rx.finditer(view):
+        parts += (text[pos : m.start()], repl)
+        pos = m.end()
+    parts.append(text[pos:])
+    return "".join(parts)
+
+
+def _round4(x: float) -> float:
+    """Spark's round(x, 4) on a double: half up on the shortest decimal
+    string (BigDecimal.valueOf), where Python's round is half-even on
+    the binary value (3.90625 -> 3.9063, not 3.9062)."""
+    return float(Decimal(repr(x)).quantize(_ROUND4, ROUND_HALF_UP))
+
+
+def curate_batch(texts, tables=None) -> dict[str, list]:
+    """Every column the quality chain adds (``CURATE_DDL``, in order)
+    for a batch of texts, as one list per column.
+
+    Each text is scanned a few times, not once per rule: one whitespace
+    split gives n_words, the word characters and the alpha words; one
+    lowered token split feeds both perplexity and the stopword hits; the
+    symbol count is three substring counts; the PII and toxicity regexes
+    run only when their necessary condition holds ('@' or a digit
+    followed by a separator; a blocklist term in the lowered text), on
+    ``_java_word_view`` so that ``\\b`` and ``(?i)`` behave as in Java."""
+    texts = [t or "" for t in texts]
+    lowered = [t.lower() for t in texts]
+    tok_lists = [_WORD_RE.findall(t) for t in lowered]
+    langs, confs = langid_scores_batch(texts)
+    ppls = _ppl_tokens(tok_lists, tables)
+    r = RULES
+    rows = []
+    for text, low, toks, lang, conf, ppl in zip(texts, lowered, tok_lists, langs, confs, ppls):
+        if any(c in text for c in _SPLIT_EXTRA):
+            words = [w for w in _WS_SPLIT_RE.split(text) if w]
+        else:
+            words = text.split()
+        n_words = len(words)
+        n_or_1 = max(n_words, 1)
+        mean_wl = sum(map(len, words)) / n_or_1
+        n_symbols = text.count("#") + text.count("…") + text.count("...")
+        alpha_words = n_words - len(_NON_ALPHA_WORD_RE.findall(" " + text))
+        rules = (
+            r["min_words"] <= n_words <= r["max_words"],
+            r["min_mean_word_len"] <= mean_wl <= r["max_mean_word_len"],
+            float(n_symbols) <= r["max_symbol_word_ratio"] * n_or_1,
+            float(alpha_words) >= r["min_alpha_word_ratio"] * n_or_1,
+            len(_STOPWORD_SET.intersection(toks)) >= r["min_stopword_hits"],
+        )
+        quality_pass = all(rules)
+        # as in with_pii_scrub: counts on the original text, replacements
+        # chained on the scrubbed one in PII_PATTERNS order
+        scrubbed, pii_count = text, 0
+        if "@" in text or _DIGIT_SEP_RE.search(text):
+            view = _java_word_view(text)
+            for rx, repl in _PII_RES:
+                pii_count += len(rx.findall(view))
+                scrubbed = _java_sub(rx, repl, scrubbed)
+        toxic_hits = 0
+        if any(t in low for t in TOXIC_TERMS):
+            toxic_hits = len(_TOXIC_PY_RE.findall(_java_word_view(text)))
+        rows.append((
+            lang, conf, ppl, n_words, _round4(mean_wl), *rules, quality_pass,
+            scrubbed, pii_count, toxic_hits, toxic_hits == 0,
+            keep_py(lang, quality_pass, toxic_hits == 0, ppl),
+        ))
+    return {c: [row[i] for row in rows] for i, c in enumerate(CURATE_COLUMNS)}
+
+
+def heuristics_py(text: str) -> dict:
+    """Per-row twin of ``with_heuristics``: ``curate_batch`` on one text."""
+    cols = curate_batch([text])
+    return {c: cols[c][0] for c in HEURISTIC_COLUMNS}
+
+
+def pii_scrub_py(text: str) -> dict:
+    """Per-row twin of ``with_pii_scrub``: ``curate_batch`` on one text."""
+    cols = curate_batch([text])
+    return {c: cols[c][0] for c in SCRUB_COLUMNS}
+
+
+def langid_ppl_batch(texts, tables=None) -> dict[str, list]:
+    """The ``LANGID_PPL_DDL`` columns for a batch of texts."""
+    langs, confs = langid_scores_batch(texts)
+    return {"lang_pred": langs, "lang_conf": confs, "ppl": ppl_batch(texts, tables)}
+
+
 def with_langid_ppl(spark, df: DataFrame, text_col: str = "text", ppl_tables=None) -> DataFrame:
     """langid + perplexity in ONE mapInPandas stage.
 
@@ -551,20 +673,16 @@ def with_langid_ppl(spark, df: DataFrame, text_col: str = "text", ppl_tables=Non
     in_schema = df.schema
     out_ddl = ", ".join(
         [f"`{f.name}` {f.dataType.simpleString()}" for f in in_schema.fields]
-        + ["lang_pred string", "lang_conf double", "ppl double"]
+        + [LANGID_PPL_DDL]
     )
     cols = [f.name for f in in_schema.fields]
 
     def run(batches):
         tables = bc.value
         for pdf in batches:
-            texts = pdf[text_col].tolist()
-            langs, confs = langid_scores_batch(texts)
-            ppls = ppl_batch(texts, tables)
             out = pdf[cols].copy()
-            out["lang_pred"] = langs
-            out["lang_conf"] = confs
-            out["ppl"] = ppls
+            for c, v in langid_ppl_batch(pdf[text_col].tolist(), tables).items():
+                out[c] = v
             yield out
 
     return df.mapInPandas(run, schema=out_ddl)

@@ -11,7 +11,7 @@ tests/test_pipeline.py).
 
 It deliberately shares the leaf functions (the page -> sequence walk
 extract._page_sequence over html_parser.parse_nodes' streaming pass,
-tokenizer.tokenize, model.score_chunks, quality *_py twins) with the
+tokenizer.tokenize, model.score_chunks, quality.curate_batch) with the
 Spark operators — the thing under test is the *distributed plan*
 (shuffles, aggregation order, Arrow round-trips, broadcast), not the
 leaf math. The parser itself is checked against the full instrumented
@@ -25,7 +25,7 @@ import pandas as pd
 from . import config as C
 from .model import load_weights, score_chunks
 from .operators.extract import _page_sequence
-from .operators.quality import heuristics_py, keep_py, langid_scores_py, pii_scrub_py, ppl_py
+from .operators.quality import curate_batch
 
 _W = None
 
@@ -76,28 +76,11 @@ def extract_pages(pages: list[dict], threshold: float = C.PRIMARY_THRESHOLD) -> 
 
 def curate_pages(pages: list[dict], threshold: float = C.PRIMARY_THRESHOLD) -> pd.DataFrame:
     """Full oracle: extraction + quality chain -> one labeled row per
-    extracted url (url, text, lang_pred, lang_conf, ppl, quality_pass,
-    scrubbed_text, pii_count, toxic_hits, toxicity_pass, keep)."""
-    rows = []
-    for rec in extract_pages(pages, threshold).to_dict("records"):
-        text = rec["text"]
-        lang_pred, lang_conf = langid_scores_py(text)
-        ppl = ppl_py(text)
-        heur = heuristics_py(text)
-        scrub = pii_scrub_py(text)
-        rows.append(
-            {
-                "url": rec["url"],
-                "text": text,
-                "lang_pred": lang_pred,
-                "lang_conf": lang_conf,
-                "ppl": ppl,
-                **heur,
-                **scrub,
-                "keep": keep_py(lang_pred, heur["quality_pass"], scrub["toxicity_pass"], ppl),
-            }
-        )
-    return pd.DataFrame(rows)
+    extracted url, with the columns of extract_curate_fused (url, text,
+    then quality.CURATE_DDL)."""
+    extracted = extract_pages(pages, threshold)
+    cols = curate_batch(extracted["text"].tolist())
+    return pd.DataFrame({"url": extracted["url"].tolist(), "text": extracted["text"].tolist(), **cols})
 
 
 def f1_keep_drop(oracle_keep: pd.Series, pipeline_keep: pd.Series) -> float:

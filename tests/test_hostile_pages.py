@@ -44,16 +44,14 @@ def _deep_div(n: int) -> bytes:
 
 def _assert_plans_match_oracle(spark, pages: list[dict]) -> pd.DataFrame:
     """fused, staged (extract_pipeline + quality chain) and oracle agree
-    per url; returns the oracle's rows."""
+    per url on every column; returns the oracle's rows."""
     df = spark.createDataFrame(pd.DataFrame(pages), schema=WEB_PAGES_DDL)
     fused = extract_curate_fused(spark, df).toPandas()
     staged = quality_chain(spark, extract_pipeline(spark, df)).toPandas()
-    want = oracle.curate_pages(pages)
+    want = oracle.curate_pages(pages).sort_values("url").reset_index(drop=True)
     for got in (fused, staged):
-        assert sorted(got["url"]) == sorted(want["url"])
-        merged = got.merge(want, on="url", suffixes=("_got", "_want"))
-        for col in ("text", "lang_pred", "quality_pass", "scrubbed_text", "toxicity_pass", "keep"):
-            assert (merged[f"{col}_got"] == merged[f"{col}_want"]).all(), col
+        got = got.sort_values("url").reset_index(drop=True)
+        pd.testing.assert_frame_equal(got, want, check_dtype=False, check_exact=True)
     return want
 
 

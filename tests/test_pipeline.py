@@ -80,13 +80,69 @@ def test_fused_curate_multi_chunk_pages_match_oracle(spark, pages):
     long_pages = [_long_page(i, n, pages[0]["warc_ts"]) for i, n in enumerate((400, 1000, 700))]
     all_pages = pages + long_pages
     df = spark.createDataFrame(pd.DataFrame(all_pages), schema=WEB_PAGES_DDL)
-    got = extract_curate_fused(spark, df).toPandas()
-    want = oracle.curate_pages(all_pages)
+    got = extract_curate_fused(spark, df).toPandas().sort_values("url").reset_index(drop=True)
+    want = oracle.curate_pages(all_pages).sort_values("url").reset_index(drop=True)
     assert {p["url"] for p in long_pages} <= set(want["url"])
-    assert sorted(got["url"]) == sorted(want["url"])
-    merged = got.merge(want, on="url", suffixes=("_got", "_want"))
-    for col in ("text", "lang_pred", "quality_pass", "scrubbed_text", "toxicity_pass", "keep"):
-        assert (merged[f"{col}_got"] == merged[f"{col}_want"]).all(), col
+    pd.testing.assert_frame_equal(got, want, check_dtype=False, check_exact=True)
+
+
+# Kept texts that reach every branch of the quality kernel: each PII kind,
+# blocklist terms in mixed case, a mean word length tie at the fifth
+# decimal, letters whose case folding differs between Java and Python
+# (ſ U+017F, the Kelvin sign U+212A, İ U+0130, ẞ U+1E9E), and characters
+# whose word-ness at \b differs (½, a combining mark).
+TIE_TEXT = (
+    "The time of the day and the way of the word is all that you can see "
+    "from there when they write with some other things for their neighbours "
+    "on long evenings."
+)
+SPECIAL_TEXTS = {
+    "pii": "Mail john.doe@example.com or call +1 555-123-4567 about SSN "
+           "123-45-6789, card 4111 1111 1111 1111 and host 192.168.0.1 today.",
+    "toxic": "They said BadWord1 and sLuR2 in the middle of the day, not slur1é.",
+    "fold": "The \u017flur1 of the day is the one with the \u212a sign, "
+            "\u0130S it in the STRA\u1e9eE and \u017fo on for the rest of it.",
+    "tie": TIE_TEXT,
+    "boundary": "Not slur1½ nor 123-45-6789½ nor 1.2.3.4\u0301 made it into "
+                "the text of the day, said \u0301slur2 in the end.",
+}
+
+
+def _special_page(name: str, text: str, ts) -> dict:
+    """A page whose only kept node is ``text`` (one <p>; the model keeps it)."""
+    html = f"<html><body><main><p>{text}</p></main></body></html>"
+    url = f"https://www.special.example/{name}.html"
+    return {"url": url, "warc_ts": ts, "html": html.encode("utf-8"), "text": "", "lang": "en"}
+
+
+def test_curate_plans_match_oracle_on_all_columns(spark, pages):
+    """extract_curate_fused (the Python quality kernel in the fused
+    worker), quality_chain(extract_pipeline) (the Catalyst tail) and
+    oracle.curate_pages agree on every output column, in the same order
+    and types, over the fixture pages plus pages that reach the PII,
+    toxicity and rounding branches."""
+    ts = pages[0]["warc_ts"]
+    special = [_special_page(k, v, ts) for k, v in SPECIAL_TEXTS.items()]
+    all_pages = pages + special
+    df = spark.createDataFrame(pd.DataFrame(all_pages), schema=WEB_PAGES_DDL)
+    fused = extract_curate_fused(spark, df)
+    staged = quality_chain(spark, extract_pipeline(spark, df))
+    assert [(f.name, f.dataType) for f in fused.schema.fields] == [
+        (f.name, f.dataType) for f in staged.schema.fields
+    ]
+    want = oracle.curate_pages(all_pages).sort_values("url").reset_index(drop=True)
+    assert list(want.columns) == fused.columns
+    kept = dict(zip(want["url"], want["text"]))
+    assert [kept.get(p["url"]) for p in special] == list(SPECIAL_TEXTS.values())
+    row = want.set_index("text").loc
+    assert row[SPECIAL_TEXTS["pii"], "pii_count"] == 5
+    assert row[SPECIAL_TEXTS["toxic"], "toxic_hits"] == 2
+    assert row[SPECIAL_TEXTS["fold"], "toxic_hits"] == 0  # Java folds ASCII only
+    assert row[TIE_TEXT, "mean_word_len"] == 3.9063  # 125 / 32, half up
+    assert row[SPECIAL_TEXTS["boundary"], ["toxic_hits", "pii_count"]].tolist() == [2, 1]
+    for plan in (fused, staged):
+        got = plan.toPandas().sort_values("url").reset_index(drop=True)
+        pd.testing.assert_frame_equal(got, want, check_dtype=False, check_exact=True)
 
 
 def test_text_nodes_match_oracle(spark, web_pages, pages):

@@ -62,6 +62,38 @@ def test_quality_chain_single_python_stage(spark, wp_parquet):
     assert "BatchEvalPython" not in plan  # no row-at-a-time python, ever
 
 
+def _expression_classes(tree) -> set[str]:
+    """Short class names of every node and expression in a plan's JSON form."""
+    found, stack = set(), [tree]
+    while stack:
+        o = stack.pop()
+        if isinstance(o, dict):
+            if "class" in o:
+                found.add(o["class"].rsplit(".", 1)[-1])
+            stack.extend(o.values())
+        elif isinstance(o, list):
+            stack.extend(o)
+    return found
+
+
+def test_curate_fused_is_one_python_stage_no_regex_tail(spark, wp_parquet):
+    """The whole quality chain runs in the fused worker: the executed
+    plan has exactly one MapInPandas node and no regex, split or lower
+    expression anywhere."""
+    import json
+
+    from neuscraper_spark.operators.extract import extract_curate_fused
+
+    plan = extract_curate_fused(spark, wp_parquet)._jdf.queryExecution().executedPlan()
+    nodes = json.loads(plan.toJSON())
+    node_classes = [n["class"].rsplit(".", 1)[-1] for n in nodes]
+    assert node_classes.count("MapInPandasExec") == 1, node_classes
+    tail = {"RegExpReplace", "RegExpExtractAll", "StringSplit", "Lower"}
+    exprs = _expression_classes(nodes)
+    assert "PythonUDF" in exprs  # the walk reached the expressions
+    assert not exprs & tail, exprs & tail
+
+
 def test_dedup_plans_no_nested_loop_join(spark):
     # the sketch row registers the LSH paths (incl. d5's) and d2 is
     # gram-equi-join: neither may fall back to a quadratic

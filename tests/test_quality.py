@@ -125,14 +125,15 @@ def test_phone_class_not_a_range():
 
 
 def test_word_stat_formulas_equal_definitions():
-    # The hot path computes word stats WITHOUT materializing the word
-    # array (regexp formulas, no higher-order functions); pin that the
-    # formulas equal the definitional forms on adversarial strings.
+    # The Column form computes word stats WITHOUT materializing the word
+    # array (regexp formulas, no higher-order functions) and the kernel
+    # counts non-alpha words with one regex; pin that the formulas equal
+    # the definitional forms on adversarial strings.
     import re
     import random
 
     rng = random.Random(99)
-    atoms = ["word", "123", "a1b", "...", "…", "#", "é", "ab-cd", "'", "x"] + list(Q.WS_CHARS)
+    atoms = ["word", "123", "a1b", "...", "…", "#", "é", "ab-cd", "'", "x", "\x1c"] + list(Q.WS_CHARS)
     for _ in range(300):
         s = "".join(rng.choice(atoms) for _ in range(rng.randint(0, 40)))
         words = [w for w in re.split(Q.WS_RE, s) if w]
@@ -141,7 +142,7 @@ def test_word_stat_formulas_equal_definitions():
         total = sum(len(w) for w in words)
         alpha = sum(1 for w in words if re.search(r"[A-Za-zÀ-ÿ]", w))
         assert len(re.sub(Q.WS_RE, "", s)) == total, repr(s)
-        assert len(re.findall(Q.ALPHA_WORD_RE, s)) == alpha, repr(s)
+        assert len(words) - len(Q._NON_ALPHA_WORD_RE.findall(" " + s)) == alpha, repr(s)
 
 
 def test_heuristics_twins_agree_fuzz(spark):
@@ -149,23 +150,80 @@ def test_heuristics_twins_agree_fuzz(spark):
     # letters, digits — twin agreement on all derived columns.
     import random
 
+    # letters whose case folding differs between Java and Python (ſ, the
+    # Kelvin sign, İ, ẞ), characters whose word-ness differs (½, ², Ⅷ, a
+    # combining mark), blocklist terms and PII fragments that reach the
+    # kernel's regex gates, and \x1c, which str.split() splits on
     rng = random.Random(1234)
     atoms = ["word", "the", "de", "...", "…", "#", "zxq", "éàü", "12+345+6789",
-             "a", "Straße", "naïve", "x" * 30, "42"] + list(Q.WS_CHARS)
+             "a", "Straße", "naïve", "x" * 30, "42", "\u017f", "\u212a", "\u0130",
+             "\u1e9e", "\u017flur1", "SLUR2", "BadWord1", "IS", "\u0130n", "\x1c",
+             "a@b.co", "@", "555-123-4567", "1.2.3.4", "-", ".", "½", "²", "Ⅷ",
+             "\u0301", "_", "slur1"] + list(Q.WS_CHARS)
     texts = [
         "".join(rng.choice(atoms) for _ in range(rng.randint(0, 80)))
         for _ in range(60)
     ]
     pdf = pd.DataFrame({"url": [f"f{i}" for i in range(len(texts))], "text": texts})
-    cols = [
-        "n_words", "mean_word_len", "rule_word_count", "rule_mean_word_len",
-        "rule_symbol_ratio", "rule_alpha_ratio", "rule_stopwords", "quality_pass",
-    ]
-    got = Q.with_heuristics(spark.createDataFrame(pdf)).select("url", *cols).toPandas()
+    cols = list(Q.HEURISTIC_COLUMNS + Q.SCRUB_COLUMNS)
+    got = Q.with_pii_scrub(Q.with_heuristics(spark.createDataFrame(pdf)))
+    got = got.select("url", *cols).toPandas()
+    want = Q.curate_batch(texts)
     for _, row in got.iterrows():
-        want = Q.heuristics_py(texts[int(row["url"][1:])])
+        i = int(row["url"][1:])
         for c in cols:
-            assert row[c] == want[c], (row["url"], c, row[c], want[c])
+            assert row[c] == want[c][i], (row["url"], c, row[c], want[c][i])
+
+
+def test_mean_word_len_rounds_half_up_like_spark(spark):
+    """Spark's round(x, 4) rounds the shortest decimal string half up;
+    Python's round is half-even on the binary value. 125 chars over 32
+    words is 3.90625: Spark writes 3.9063."""
+    texts = [
+        "x" * 94 + " a" * 31,                 # 125 / 32 = 3.90625
+        "x" * 35 + " a" * 31,                 # 66 / 32 = 2.0625 (no tie)
+        " ".join(["abc"] * 31 + ["abcdefgh"]),  # 101 / 32 = 3.15625
+        "y" * 3 + " b" * 31,                  # 34 / 32 = 1.0625 (no tie)
+    ]
+    got = Q.with_heuristics(spark.createDataFrame([(t,) for t in texts], "text string"))
+    spark_vals = [r["mean_word_len"] for r in got.select("mean_word_len").collect()]
+    assert spark_vals[0] == 3.9063 and spark_vals[2] == 3.1563
+    assert [Q.heuristics_py(t)["mean_word_len"] for t in texts] == spark_vals
+
+
+def test_toxicity_and_pii_match_like_java(spark):
+    """Java's (?i) folds ASCII only; Python's also folds ſ (U+017F) to s.
+    Java's \\b (JDK 17) counts letters, decimal digits, '_' and marks on a
+    letter or digit as word characters; Python's counts every isalnum()
+    character (½, ², Ⅷ) and no mark. The kernel matches Java."""
+    texts = [
+        "the \u017flur1 of",       # long s: no hit in Java
+        "the SlUr1 of",            # ASCII mixed case: a hit
+        "the \u017fLUR2 and BADWORD1",
+        "éslur1 slur1é ٣slur1 slur1٣ _slur1 slur1_",
+        "(slur2) -badword2- slur1.",
+        "x slur1½ y ½slur2 slur1Ⅷ",  # ½ and Ⅷ are no word chars in Java
+        "x slur1\u0301 y \u0301slur2 _\u0301slur1 é\u0301slur2",  # marks
+        "ssn 123-45-6789½, card ²1111 2222 3333 4444, ip 1.2.3.4\u0301",
+        "mail a@b.com½ or 1-555-123-4567\u0301 now",
+    ]
+    cols = ["scrubbed_text", "pii_count", "toxic_hits", "toxicity_pass"]
+    got = Q.with_pii_scrub(spark.createDataFrame([(t,) for t in texts], "text string"))
+    rows = [r.asDict() for r in got.select(*cols).collect()]
+    assert [r["toxic_hits"] for r in rows] == [0, 1, 1, 0, 3, 3, 2, 0, 0]
+    assert [r["pii_count"] for r in rows][-2:] == [2, 2]
+    assert rows == [Q.pii_scrub_py(t) for t in texts]
+
+
+def test_str_split_extra_whitespace_is_pinned():
+    """The kernel splits words with str.split() unless the text holds a
+    character str.split() treats as whitespace and White_Space does not;
+    that set is exactly _SPLIT_EXTRA, and every WS_CHARS char is one
+    str.split() splits on."""
+    extra = {chr(c) for c in range(0x110000) if chr(c).isspace()} - set(Q.WS_CHARS)
+    assert extra == set(Q._SPLIT_EXTRA)
+    assert all(c.isspace() for c in Q.WS_CHARS)
+    assert Q.heuristics_py("a\x1cb c")["n_words"] == 2
 
 
 def test_keep_combiner(spark, df):
