@@ -534,6 +534,33 @@ _TOXIC_PY_RE = re.compile(_TOXIC_RE)
 _DIGIT_SEP_RE = re.compile(r"[0-9][ .\-]")
 _NON_ASCII_RUN_RE = re.compile(r"[^\x00-\x7f]+")
 _LETTER_OR_DIGIT = frozenset(("Lu", "Ll", "Lt", "Lm", "Lo", "Nd"))
+# Where unicodedata (Unicode 14.0 on Python 3.11) and JDK 17's Character
+# (Unicode 13.0) disagree on a character's word-ness: the letters,
+# digits and marks that Unicode 14.0 added, which JDK 17 does not define,
+# and U+1734 (Mc in 14.0, Mn in 13.0).
+# tests/test_quality.py::test_java_word_view_matches_jvm_on_every_code_point
+# checks the view against the running JVM's \b.
+_UNICODE_14_WORD_CHARS = (
+    (0x0870, 0x0887), (0x0889, 0x088E), (0x0898, 0x089F), (0x08B5, 0x08B5),
+    (0x08C8, 0x08D2), (0x0C3C, 0x0C3C), (0x0C5D, 0x0C5D), (0x0CDD, 0x0CDD),
+    (0x170D, 0x170D), (0x171F, 0x171F), (0x180F, 0x180F), (0x1AC1, 0x1ACE),
+    (0x1B4C, 0x1B4C), (0x1DFA, 0x1DFA), (0x2C2F, 0x2C2F), (0x2C5F, 0x2C5F),
+    (0x9FFD, 0x9FFF), (0xA7C0, 0xA7C1), (0xA7D0, 0xA7D1), (0xA7D3, 0xA7D3),
+    (0xA7D5, 0xA7D9), (0xA7F2, 0xA7F4), (0x10570, 0x1057A), (0x1057C, 0x1058A),
+    (0x1058C, 0x10592), (0x10594, 0x10595), (0x10597, 0x105A1),
+    (0x105A3, 0x105B1), (0x105B3, 0x105B9), (0x105BB, 0x105BC),
+    (0x10780, 0x10785), (0x10787, 0x107B0), (0x107B2, 0x107BA),
+    (0x10F70, 0x10F85), (0x11070, 0x11075), (0x110C2, 0x110C2),
+    (0x11740, 0x11746), (0x11AB0, 0x11ABF), (0x12F90, 0x12FF0),
+    (0x16A70, 0x16ABE), (0x16AC0, 0x16AC9), (0x1AFF0, 0x1AFF3),
+    (0x1AFF5, 0x1AFFB), (0x1AFFD, 0x1AFFE), (0x1B11F, 0x1B122),
+    (0x1CF00, 0x1CF2D), (0x1CF30, 0x1CF46), (0x1DF00, 0x1DF1E),
+    (0x1E290, 0x1E2AE), (0x1E7E0, 0x1E7E6), (0x1E7E8, 0x1E7EB),
+    (0x1E7ED, 0x1E7EE), (0x1E7F0, 0x1E7FE), (0x2A6DE, 0x2A6DF),
+    (0x2B735, 0x2B738),
+)
+_JDK17_CATEGORY = {chr(c): "Cn" for lo, hi in _UNICODE_14_WORD_CHARS for c in range(lo, hi + 1)}
+_JDK17_CATEGORY["\u1734"] = "Mn"
 
 
 def _java_word_view(text: str) -> str:
@@ -548,7 +575,13 @@ def _java_word_view(text: str) -> str:
     NBSP where it does not, and the patterns run on this view with
     Java's boundaries. Neither stand-in folds to an ASCII letter, so
     Python's ``(?i)`` then folds ASCII only, as Java's does ('ſ' is not
-    's'). ASCII characters and all positions are unchanged."""
+    's'). ASCII characters and all positions are unchanged.
+
+    Categories come from ``unicodedata`` corrected by ``_JDK17_CATEGORY``
+    to JDK 17's Unicode 13.0, so the view is exact for Python's Unicode
+    14.0 against JDK 17. Another pair of versions needs the table
+    rebuilt; ``test_java_word_view_matches_jvm_on_every_code_point``
+    fails until it is."""
     if text.isascii():
         return text
     parts, pos = [], 0
@@ -557,7 +590,7 @@ def _java_word_view(text: str) -> str:
         parts.append(text[pos:start])
         base = start > 0 and text[start - 1].isalnum()
         for c in m.group():
-            cat = unicodedata.category(c)
+            cat = _JDK17_CATEGORY.get(c) or unicodedata.category(c)
             if cat != "Mn":
                 base = cat in _LETTER_OR_DIGIT
             parts.append("é" if base else "\xa0")
@@ -566,13 +599,10 @@ def _java_word_view(text: str) -> str:
     return "".join(parts)
 
 
-def _java_sub(rx: re.Pattern, repl: str, text: str) -> str:
-    """``rx.sub(repl, text)`` with Java's word boundaries."""
-    view = _java_word_view(text)
-    if view is text:
-        return rx.sub(repl, text)
+def _splice(text: str, matches, repl: str) -> str:
+    """``text`` with each match span replaced by ``repl``."""
     parts, pos = [], 0
-    for m in rx.finditer(view):
+    for m in matches:
         parts += (text[pos : m.start()], repl)
         pos = m.end()
     parts.append(text[pos:])
@@ -623,16 +653,28 @@ def curate_batch(texts, tables=None) -> dict[str, list]:
         )
         quality_pass = all(rules)
         # as in with_pii_scrub: counts on the original text, replacements
-        # chained on the scrubbed one in PII_PATTERNS order
-        scrubbed, pii_count = text, 0
+        # chained on the scrubbed one in PII_PATTERNS order. A pattern's
+        # matches on the text are its matches on the scrubbed text until
+        # an earlier pattern has replaced something. A replacement is
+        # ASCII, so the scrubbed text's view is the view spliced the same
+        # way, unless a non-ASCII character (a mark whose base was in the
+        # match) follows a match; then the view is built again.
+        scrubbed, pii_count, view = text, 0, None
         if "@" in text or _DIGIT_SEP_RE.search(text):
-            view = _java_word_view(text)
+            view = scrubbed_view = _java_word_view(text)
             for rx, repl in _PII_RES:
-                pii_count += len(rx.findall(view))
-                scrubbed = _java_sub(rx, repl, scrubbed)
+                found = list(rx.finditer(view))
+                pii_count += len(found)
+                if scrubbed_view is not view:
+                    found = list(rx.finditer(scrubbed_view))
+                if found:
+                    rebuild = any(not scrubbed[m.end() : m.end() + 1].isascii() for m in found)
+                    scrubbed = _splice(scrubbed, found, repl)
+                    scrubbed_view = (_java_word_view(scrubbed) if rebuild
+                                     else _splice(scrubbed_view, found, repl))
         toxic_hits = 0
         if any(t in low for t in TOXIC_TERMS):
-            toxic_hits = len(_TOXIC_PY_RE.findall(_java_word_view(text)))
+            toxic_hits = len(_TOXIC_PY_RE.findall(view or _java_word_view(text)))
         rows.append((
             lang, conf, ppl, n_words, _round4(mean_wl), *rules, quality_pass,
             scrubbed, pii_count, toxic_hits, toxic_hits == 0,

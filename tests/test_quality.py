@@ -152,17 +152,20 @@ def test_heuristics_twins_agree_fuzz(spark):
 
     # letters whose case folding differs between Java and Python (ſ, the
     # Kelvin sign, İ, ẞ), characters whose word-ness differs (½, ², Ⅷ, a
-    # combining mark), blocklist terms and PII fragments that reach the
-    # kernel's regex gates, and \x1c, which str.split() splits on
+    # combining mark, U+0870 and U+1734 from Unicode 14.0), blocklist
+    # terms and PII fragments that reach the kernel's regex gates (marks
+    # right after a PII match change the scrubbed text's view), and \x1c,
+    # which str.split() splits on
     rng = random.Random(1234)
     atoms = ["word", "the", "de", "...", "…", "#", "zxq", "éàü", "12+345+6789",
              "a", "Straße", "naïve", "x" * 30, "42", "\u017f", "\u212a", "\u0130",
              "\u1e9e", "\u017flur1", "SLUR2", "BadWord1", "IS", "\u0130n", "\x1c",
              "a@b.co", "@", "555-123-4567", "1.2.3.4", "-", ".", "½", "²", "Ⅷ",
-             "\u0301", "_", "slur1"] + list(Q.WS_CHARS)
+             "\u0301", "_", "slur1", "\u0870", "\u1734", "4111 1111 1111 1111",
+             "123-45-6789"] + list(Q.WS_CHARS)
     texts = [
         "".join(rng.choice(atoms) for _ in range(rng.randint(0, 80)))
-        for _ in range(60)
+        for _ in range(300)
     ]
     pdf = pd.DataFrame({"url": [f"f{i}" for i in range(len(texts))], "text": texts})
     cols = list(Q.HEURISTIC_COLUMNS + Q.SCRUB_COLUMNS)
@@ -195,7 +198,9 @@ def test_toxicity_and_pii_match_like_java(spark):
     """Java's (?i) folds ASCII only; Python's also folds ſ (U+017F) to s.
     Java's \\b (JDK 17) counts letters, decimal digits, '_' and marks on a
     letter or digit as word characters; Python's counts every isalnum()
-    character (½, ², Ⅷ) and no mark. The kernel matches Java."""
+    character (½, ², Ⅷ) and no mark, and its Unicode 14.0 tables hold
+    letters JDK 17's Unicode 13.0 does not define. The kernel matches
+    Java."""
     texts = [
         "the \u017flur1 of",       # long s: no hit in Java
         "the SlUr1 of",            # ASCII mixed case: a hit
@@ -206,13 +211,52 @@ def test_toxicity_and_pii_match_like_java(spark):
         "x slur1\u0301 y \u0301slur2 _\u0301slur1 é\u0301slur2",  # marks
         "ssn 123-45-6789½, card ²1111 2222 3333 4444, ip 1.2.3.4\u0301",
         "mail a@b.com½ or 1-555-123-4567\u0301 now",
+        "x slur1\u0870 123-45-6789\u0870",  # U+0870 is a letter in Unicode 14.0, undefined in JDK 17
+        "a\u1734slur1 \u1734slur2",  # U+1734 is Mc in Unicode 14.0, Mn in JDK 17
+        # a mark after an email has no base once the email is replaced,
+        # so the ip and ssn after it match in the scrubbed text only
+        "a@b.com\u0301192.168.0.1 and a@b.com\u0301123-45-6789",
     ]
     cols = ["scrubbed_text", "pii_count", "toxic_hits", "toxicity_pass"]
     got = Q.with_pii_scrub(spark.createDataFrame([(t,) for t in texts], "text string"))
     rows = [r.asDict() for r in got.select(*cols).collect()]
-    assert [r["toxic_hits"] for r in rows] == [0, 1, 1, 0, 3, 3, 2, 0, 0]
-    assert [r["pii_count"] for r in rows][-2:] == [2, 2]
+    assert [r["toxic_hits"] for r in rows] == [0, 1, 1, 0, 3, 3, 2, 0, 0, 1, 1, 0]
+    assert [r["pii_count"] for r in rows][-5:] == [2, 2, 1, 0, 2]
+    assert rows[-1]["scrubbed_text"] == "<EMAIL>\u0301<IP> and <EMAIL>\u0301<SSN>"
     assert rows == [Q.pii_scrub_py(t) for t in texts]
+
+
+def test_java_word_view_matches_jvm_on_every_code_point(spark):
+    """Java's \\b takes word-ness from JDK 17's Character tables (Unicode
+    13.0), the kernel from unicodedata corrected by _JDK17_CATEGORY. For
+    every code point, the character after 'a' (a mark there has a base)
+    and after ' ' (a mark there has none) must start a boundary in the
+    view exactly where it does in Java. The table holds for one pair of
+    versions, so an upgrade of either side fails here."""
+    import re
+    import unicodedata
+
+    from pyspark.sql import functions as F
+
+    cps = [c for c in range(0x110000) if not 0xD800 <= c <= 0xDFFF]
+    chars = spark.createDataFrame(pd.DataFrame({"cp": cps, "c": [chr(c) for c in cps]}))
+    got = chars.select(
+        "cp",
+        F.concat(F.lit("a"), "c").rlike(r"^a\b").alias("after_letter"),
+        F.concat(F.lit(" "), "c").rlike(r"^ \b").alias("after_space"),
+    ).toPandas()
+    java = dict(zip(got["cp"], zip(got["after_letter"], got["after_space"])))
+    after_letter, after_space = re.compile(r"a\b"), re.compile(r" \b")
+    wrong = [
+        hex(c) for c in cps
+        if (bool(after_letter.match(Q._java_word_view("a" + chr(c)))),
+            bool(after_space.match(Q._java_word_view(" " + chr(c))))) != java[c]
+    ]
+    jvm = spark.sparkContext._jvm.java.lang.System.getProperty("java.specification.version")
+    assert len(java) == len(cps)
+    assert not wrong, (unicodedata.unidata_version, jvm, len(wrong), wrong[:20])
+    # the pair of versions quality._UNICODE_14_WORD_CHARS was built for
+    assert (unicodedata.unidata_version, jvm) == ("14.0.0", "17")
 
 
 def test_str_split_extra_whitespace_is_pinned():
