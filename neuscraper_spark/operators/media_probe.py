@@ -1,22 +1,28 @@
-"""Container-level probing for the codecs we honestly don't decode.
+"""Header-level media inventory: format, dimensions, rate and duration
+read from container headers, never from the payload.
 
-MP3 (MPEG-1/2 audio) and MP4 (ISO base media / ISO 14496-12) carry
-their structure in public container formats that need no DSP to parse:
-an MP3 is a walk of self-describing frame headers, an MP4 a tree of
-length-prefixed boxes. ``probe_mp3`` / ``probe_mp4`` extract the
-metadata a curation pipeline filters on (duration, rates, codec ids,
-track dimensions, sample counts) without decoding a single audio/video
-sample — the ffprobe role, from scratch against the public specs. The
-Spark stage ``probe_media`` runs them Arrow-batched over a media table.
+Every format here carries the metadata a curation filter needs in a
+public, self-describing header, so no pixel, sample or frame is decoded:
 
-Payload DECODE for these formats still raises NotImplementedError
-(multimodal.DECODERS) — probing metadata is not decoding media, and the
-distinction is kept explicit.
+- BMP: the BITMAPINFOHEADER holds width and height;
+- PNG: the IHDR chunk, which the spec puts first, holds them;
+- JPEG: the first SOFn segment of the marker walk holds them;
+- WAV: the ``fmt `` chunk holds the rate and the ``data`` chunk's size
+  gives the length;
+- MP3: a walk of self-describing frame headers gives duration, rate and
+  bitrate;
+- MP4: a walk of the length-prefixed ISO-BMFF box tree gives duration,
+  codec and track dimensions.
+
+``media_inventory`` runs them Arrow-batched over a table of blobs. A blob
+whose header is valid but whose payload is corrupt gets its metadata;
+only a header that cannot be read gives an ``err``.
 """
 
 from __future__ import annotations
 
 import struct
+import zlib
 from typing import Iterator
 
 import pandas as pd
@@ -200,76 +206,145 @@ def probe_mp4(payload: bytes) -> dict:
     return {"brand": brand, "duration_sec": duration_sec, "tracks": out_tracks}
 
 
-# ----------------------------------------------------------- Spark stage
-
-PROBE_DDL = (
-    "media_id long, kind string, container string, duration_sec double, "
-    "sample_rate int, bitrate_kbps int, n_tracks int, codec string, "
-    "width int, height int, probe_err string"
-)
+# ---------------------------------------------------------- BMP / PNG / JPEG
 
 
-def probe_media(media: DataFrame) -> DataFrame:
-    """Arrow-batched container probe over a media table (multimodal
-    schema). Recognizes MP3 (frame walk / ID3) and MP4 (box walk); rows
-    whose payload is neither probeable nor recognized carry probe_err
-    instead of failing the task — one bad blob in a 100 TB corpus must
-    not kill the job."""
+def probe_bmp(payload: bytes) -> tuple[int, int]:
+    """(width, height) from the BITMAPINFOHEADER after the 14-byte file
+    header; a negative height marks a top-down bitmap."""
+    if len(payload) < 54:
+        raise ValueError("truncated BMP header")
+    hdr_size = struct.unpack_from("<I", payload, 14)[0]
+    if hdr_size < 40:
+        raise ValueError(f"BMP info header of {hdr_size} bytes is not a BITMAPINFOHEADER")
+    width, height = struct.unpack_from("<ii", payload, 18)
+    return width, abs(height)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, kind, payload in zip(
-                pdf["media_id"], pdf["kind"], pdf["payload"]
-            ):
-                payload = bytes(payload)
-                row = {
-                    "media_id": int(media_id), "kind": kind, "container": None,
-                    "duration_sec": None, "sample_rate": None,
-                    "bitrate_kbps": None, "n_tracks": None, "codec": None,
-                    "width": None, "height": None, "probe_err": None,
-                }
-                try:
-                    if payload[:3] == b"ID3" or (
-                        len(payload) > 1
-                        and payload[0] == 0xFF
-                        and (payload[1] & 0xE0) == 0xE0
-                    ):
-                        m = probe_mp3(payload)
-                        row.update(
-                            container="mp3",
-                            duration_sec=m["duration_sec"],
-                            sample_rate=m["sample_rate"],
-                            bitrate_kbps=m["bitrate_kbps"],
-                        )
-                    elif len(payload) >= 12 and payload[4:8] == b"ftyp":
-                        m = probe_mp4(payload)
-                        vid = next(
-                            (t for t in m["tracks"] if t["kind"] == "video"), None
-                        )
-                        row.update(
-                            container=f"mp4/{m['brand']}",
-                            duration_sec=m["duration_sec"],
-                            n_tracks=len(m["tracks"]),
-                            codec=vid["codec"] if vid else (
-                                m["tracks"][0]["codec"] if m["tracks"] else None
-                            ),
-                            width=vid["width"] if vid else None,
-                            height=vid["height"] if vid else None,
-                        )
-                    else:
-                        row["probe_err"] = "unrecognized container"
-                except Exception as e:  # noqa: BLE001 — per-row fail-soft
-                    row["probe_err"] = f"{type(e).__name__}: {e}"[:200]
-                rows.append(row)
-            yield pd.DataFrame(rows)
 
-    return media.select("media_id", "kind", "payload").mapInPandas(
-        run, schema=PROBE_DDL
-    )
+_PNG_SIG = b"\x89PNG\r\n\x1a\n"
+
+
+def probe_png(payload: bytes) -> tuple[int, int]:
+    """(width, height) from the IHDR chunk, which must come first after
+    the signature; its CRC is checked."""
+    if len(payload) < 33:
+        raise ValueError("truncated PNG header")
+    length, ctype = struct.unpack_from(">I4s", payload, 8)
+    if ctype != b"IHDR" or length != 13:
+        raise ValueError(f"PNG starts with chunk {ctype!r} of {length} bytes, not IHDR")
+    if zlib.crc32(payload[12:29]) != struct.unpack_from(">I", payload, 29)[0]:
+        raise ValueError("PNG chunk b'IHDR' CRC mismatch")
+    width, height = struct.unpack_from(">II", payload, 16)
+    return width, height
+
+
+# SOFn markers (ITU-T T.81 B.1.1.3): C0-CF except DHT, JPG and DAC
+_JPEG_SOF = frozenset(range(0xC0, 0xD0)) - {0xC4, 0xC8, 0xCC}
+
+
+def probe_jpeg(payload: bytes) -> tuple[int, int]:
+    """(width, height) from the first SOFn segment: a walk over the
+    length-prefixed marker segments that precede it."""
+    pos = 2  # after SOI
+    while pos + 4 <= len(payload):
+        if payload[pos] != 0xFF:
+            raise ValueError(f"expected marker at byte {pos}")
+        marker = payload[pos + 1]
+        if marker in (0xD9, 0xDA):  # EOI, SOS
+            break
+        seg_len = struct.unpack_from(">H", payload, pos + 2)[0]
+        if pos + 2 + seg_len > len(payload):
+            raise ValueError("truncated JPEG segment")
+        if marker in _JPEG_SOF:
+            if seg_len < 8:
+                raise ValueError(f"JPEG SOF segment of {seg_len} bytes")
+            height, width = struct.unpack_from(">HH", payload, pos + 5)
+            return width, height
+        pos += 2 + seg_len
+    raise ValueError("JPEG has no SOF marker before its scan")
+
+
+# ------------------------------------------------------------------ WAV
+
+
+def probe_wav(payload: bytes) -> tuple[int, float]:
+    """(sample_rate, duration_sec) from the RIFF chunk walk: the rate
+    from ``fmt ``, the length from the whole blocks in ``data``. Unknown
+    chunks are skipped and odd sizes honour the RIFF pad byte; a chunk
+    that runs past the end, a short ``fmt `` or a missing ``fmt ``/
+    ``data`` raises ValueError."""
+    pos, fmt, data_size = 12, None, None
+    while pos + 8 <= len(payload):
+        cid, size = struct.unpack_from("<4sI", payload, pos)
+        if pos + 8 + size > len(payload):
+            raise ValueError(
+                f"truncated WAV chunk {cid!r}: need {size} bytes, "
+                f"have {len(payload) - pos - 8}"
+            )
+        if cid == b"fmt ":
+            if size < 16:
+                raise ValueError(f"WAV fmt chunk too short ({size} < 16 bytes)")
+            fmt = struct.unpack_from("<HHIIHH", payload, pos + 8)
+        elif cid == b"data":
+            data_size = size
+        pos += 8 + size + (size & 1)
+    if fmt is None or data_size is None:
+        raise ValueError("WAV missing fmt/data chunk")
+    _format, _channels, rate, _byte_rate, block_align, _bits = fmt
+    if not rate or not block_align:
+        raise ValueError(f"WAV fmt has rate {rate}, block align {block_align}")
+    return rate, round(data_size // block_align / rate, 4)
 
 
 # ------------------------------------------------- deterministic fixtures
+
+def fake_bmp(media_id: int) -> bytes:
+    """Header-valid 24-bit BMP of zero pixels keyed by media_id:
+    (32 + 16·(id % 3)) × (24 + 8·(id % 2)), rows padded to 4 bytes."""
+    w, h = 32 + (media_id % 3) * 16, 24 + (media_id % 2) * 8
+    raw = bytes(((w * 3 + 3) & ~3) * h)
+    return (
+        b"BM" + struct.pack("<IHHI", 54 + len(raw), 0, 0, 54)
+        + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(raw), 2835, 2835, 0, 0)
+        + raw
+    )
+
+
+def _png_chunk(ctype: bytes, body: bytes) -> bytes:
+    return struct.pack(">I", len(body)) + ctype + body + struct.pack(">I", zlib.crc32(ctype + body))
+
+
+def fake_png(media_id: int) -> bytes:
+    """Valid 8-bit grayscale PNG of zero pixels keyed by media_id:
+    (24 + 8·(id % 3)) × (16 + 8·(id % 2)), one IDAT of filter-0 rows."""
+    w, h = 24 + (media_id % 3) * 8, 16 + (media_id % 2) * 8
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
+    return (
+        _PNG_SIG + _png_chunk(b"IHDR", ihdr)
+        + _png_chunk(b"IDAT", zlib.compress(bytes((w + 1) * h)))
+        + _png_chunk(b"IEND", b"")
+    )
+
+
+def fake_jpeg(media_id: int) -> bytes:
+    """SOI, a one-component baseline SOF0 and EOI, keyed by media_id:
+    (24 + 8·(id % 3)) × (16 + 8·(id % 2)). Header only: no tables, no
+    scan."""
+    w, h = 24 + (media_id % 3) * 8, 16 + (media_id % 2) * 8
+    sof0 = b"\xff\xc0" + struct.pack(">HBHHB", 11, 8, h, w, 1) + b"\x01\x11\x00"
+    return b"\xff\xd8" + sof0 + b"\xff\xd9"
+
+
+def fake_wav(media_id: int) -> bytes:
+    """Mono PCM16 WAV of 0.1 s of silence at 16 kHz, the same for every
+    media_id."""
+    sr = 16000
+    data = bytes(sr // 10 * 2)
+    fmt = struct.pack("<HHIIHH", 1, 1, sr, sr * 2, 2, 16)
+    chunks = (b"fmt " + struct.pack("<I", len(fmt)) + fmt
+              + b"data" + struct.pack("<I", len(data)) + data)
+    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
+
 
 def mp3_frame(bitrate_idx: int = 9, kbps: int = 128, sr: int = 44100,
               padding: int = 0) -> bytes:
@@ -333,29 +408,22 @@ def fake_mp4(media_id: int) -> bytes:
     return ftyp + moov + mdat
 
 
+MEDIA_DDL = "media_id long, payload binary"
+
+
 def inventory_fixture(spark, n: int = 48, partitions: int = 4) -> DataFrame:
     """Deterministic all-format media table: media_id % 6 rotates
     BMP / PNG / JPEG / WAV / MP3 / MP4, each blob fully derived from
-    media_id — the driver-checked m1_media_inventory query decodes it
+    media_id — the m1_media_inventory query reads it
     back and compares against the frozen expected-metadata oracle."""
-    from .multimodal import MEDIA_DDL, _fake_bmp, _fake_jpeg, _fake_png, _fake_wav
+    makers = [fake_bmp, fake_png, fake_jpeg, fake_wav, fake_mp3, fake_mp4]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        makers = [
-            ("image", _fake_bmp), ("image", _fake_png), ("image", _fake_jpeg),
-            ("audio", _fake_wav), ("audio", fake_mp3), ("video", fake_mp4),
-        ]
         for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                kind, maker = makers[i % 6]
-                rows.append({
-                    "media_id": i, "kind": kind, "payload": maker(i),
-                    "meta": {"width": 0, "height": 0, "n_frames": 0,
-                             "sample_rate": 0},
-                })
-            yield pd.DataFrame(rows)
+            ids = [int(i) for i in pdf["id"]]
+            yield pd.DataFrame(
+                {"media_id": ids, "payload": [makers[i % 6](i) for i in ids]}
+            )
 
     return spark.range(0, n, 1, partitions).mapInPandas(gen, schema=MEDIA_DDL)
 
@@ -366,31 +434,27 @@ INVENTORY_DDL = (
     "media_id long, fmt string, width int, height int, sample_rate int, "
     "duration_sec double, bitrate_kbps int, codec string, err string"
 )
+_INVENTORY_COLS = ("fmt", "width", "height", "sample_rate", "duration_sec",
+                   "bitrate_kbps", "codec", "err")
 
 
 def _inventory_row(payload: bytes) -> dict:
-    """Magic-byte dispatch: REAL decode for BMP/PNG/JPEG (dims) and WAV
-    (rate + duration), container probe for MP3/MP4. Pure function so the
-    Spark stage and tests share it."""
-    from .multimodal import _PNG_SIG, decode_bmp, decode_png, decode_wav
-    from .jpeg import decode_jpeg
-
-    out = {"fmt": None, "width": None, "height": None, "sample_rate": None,
-           "duration_sec": None, "bitrate_kbps": None, "codec": None,
-           "err": None}
+    """Magic-byte dispatch to the header readers: dims for BMP/PNG/JPEG,
+    rate + duration for WAV, the container walks for MP3/MP4. Pure
+    function so the Spark stage and tests share it."""
+    out = dict.fromkeys(_INVENTORY_COLS)
     if payload[:2] == b"BM":
-        px = decode_bmp(payload)
-        out.update(fmt="bmp", height=px.shape[0], width=px.shape[1])
+        w, h = probe_bmp(payload)
+        out.update(fmt="bmp", width=w, height=h)
     elif payload[: len(_PNG_SIG)] == _PNG_SIG:
-        px = decode_png(payload)
-        out.update(fmt="png", height=px.shape[0], width=px.shape[1])
+        w, h = probe_png(payload)
+        out.update(fmt="png", width=w, height=h)
     elif payload[:2] == b"\xff\xd8":
-        px = decode_jpeg(payload)
-        out.update(fmt="jpeg", height=px.shape[0], width=px.shape[1])
+        w, h = probe_jpeg(payload)
+        out.update(fmt="jpeg", width=w, height=h)
     elif payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-        samples, sr = decode_wav(payload)
-        out.update(fmt="wav", sample_rate=sr,
-                   duration_sec=round(samples.shape[0] / sr, 4))
+        sr, dur = probe_wav(payload)
+        out.update(fmt="wav", sample_rate=sr, duration_sec=dur)
     elif payload[:3] == b"ID3" or (
         len(payload) > 1 and payload[0] == 0xFF and (payload[1] & 0xE0) == 0xE0
     ):
@@ -411,25 +475,22 @@ def _inventory_row(payload: bytes) -> dict:
 
 
 def media_inventory(media: DataFrame) -> DataFrame:
-    """One Arrow-batched pass over a media table that turns every blob
-    into the metadata row a curation filter needs (format, dims, rate,
-    duration, codec) — real from-scratch decode where we have the codec,
-    container probe where we honestly don't. Per-row fail-soft: a
-    corrupt blob carries err, never kills the task."""
+    """One Arrow-batched pass over a table of (media_id, payload) blobs
+    that turns every blob into the metadata row a curation filter needs
+    (format, dims, rate, duration, codec), read from its headers.
+    Per-row fail-soft: a blob whose header cannot be read carries err,
+    never kills the task."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                row = {"media_id": int(media_id), "fmt": None, "width": None,
-                       "height": None, "sample_rate": None,
-                       "duration_sec": None, "bitrate_kbps": None,
-                       "codec": None, "err": None}
                 try:
-                    row.update(_inventory_row(bytes(payload)))
+                    row = _inventory_row(bytes(payload))
                 except Exception as e:  # noqa: BLE001 — per-row fail-soft
+                    row = dict.fromkeys(_INVENTORY_COLS)
                     row["err"] = f"{type(e).__name__}: {e}"[:200]
-                rows.append(row)
+                rows.append({"media_id": int(media_id), **row})
             yield pd.DataFrame(rows)
 
     return media.select("media_id", "payload").mapInPandas(run, schema=INVENTORY_DDL)

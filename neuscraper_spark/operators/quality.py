@@ -225,13 +225,10 @@ def _ppl_tokens(tok_lists, tables=None) -> list[float]:
     out = np.full(len(tok_lists), float(10**9))
     flat = [t for tl in tok_lists for t in tl]
     if flat:
-        uniq, inv = np.unique(np.array(flat), return_inverse=True)
-        uid = np.fromiter(
-            (vec.vocab.get(u, -1) for u in uniq.tolist()),
-            dtype=np.int64,
-            count=len(uniq),
+        vocab = vec.vocab
+        ids = np.fromiter(
+            (vocab.get(t, -1) for t in flat), dtype=np.int64, count=len(flat)
         )
-        ids = uid[inv]
         known = ids >= 0
         p = np.where(
             known,

@@ -754,7 +754,7 @@ def c7_c8_cast_json(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# M — multimodal media inventory (real decoders + container probes)
+# M — media inventory (header reads + container probes)
 # ---------------------------------------------------------------------------
 
 # The oracle is the FROZEN expected-metadata table for the deterministic
@@ -762,9 +762,9 @@ def c7_c8_cast_json(spark, sf_dir):
 # derived from the fixture arithmetic (dims formulas, frame counts,
 # ISO 11172-3 frame duration, ISO 14496-12 mvhd duration) and
 # spot-verified by hand — regenerate with the same derivation if the
-# fixture changes. The Spark side re-decodes the blobs from scratch
-# (BMP/PNG/JPEG/WAV decoders, MP3/MP4 probes), so a regression in any
-# codec or in the Arrow plumbing flips the hash.
+# fixture changes. The Spark side reads the blobs' headers back (BMP info
+# header, PNG IHDR, JPEG SOFn, WAV fmt/data, MP3/MP4 probes), so a
+# regression in any reader or in the Arrow plumbing flips the hash.
 _MEDIA_INVENTORY_ORACLE = """SELECT * FROM (VALUES
   (CAST(0 AS BIGINT), 'bmp', CAST(32 AS INTEGER), CAST(24 AS INTEGER), CAST(NULL AS INTEGER), CAST(NULL AS DOUBLE), CAST(NULL AS INTEGER), CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR)),
   (CAST(1 AS BIGINT), 'png', CAST(32 AS INTEGER), CAST(24 AS INTEGER), CAST(NULL AS INTEGER), CAST(NULL AS DOUBLE), CAST(NULL AS INTEGER), CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR)),

@@ -1,12 +1,25 @@
-"""Container probes (MP3 frame walk, MP4 box walk) against hand-built
-spec fixtures — every expected value below is computed on paper from
-ISO 11172-3 / ISO 14496-12, not from a reference tool."""
+"""Header readers (BMP info header, PNG IHDR, JPEG SOFn, WAV fmt/data,
+MP3 frame walk, MP4 box walk) against hand-built spec fixtures and real
+third-party files. Expected values are computed on paper from the
+public specs (ISO 11172-3, ISO 14496-12, T.81, RIFF) or, for the real
+files, recorded from a full decode, not from a reference tool."""
 
+import os
+import shutil
 import struct
 
 import pytest
 
-from neuscraper_spark.operators.media_probe import probe_mp3, probe_mp4, probe_media
+from neuscraper_spark.operators.media_probe import (
+    fake_bmp,
+    fake_jpeg,
+    fake_png,
+    fake_wav,
+    probe_jpeg,
+    probe_mp3,
+    probe_mp4,
+    probe_wav,
+)
 
 
 def _mp3_frame(bitrate_idx=9, kbps=128, sr=44100, padding=0):
@@ -127,50 +140,96 @@ def test_mp4_box_walk():
         probe_mp4(b"\x00\x00\x00\xff" + b"moov")  # size past end
 
 
-def test_probe_media_spark_stage(spark):
-    import pandas as pd
+# real third-party JPEGs with their (w, h) as a full T.81 decode reports
+# them: Spark's mllib test images (grayscale.jpg and both nodejs stripes
+# are progressive) and the nodejs doc assets next to the node binary
+_SPARK_IMAGES = os.path.join(os.environ.get("SPARK_HOME", ""), "data/mllib/images/origin")
+_NODE_DOCS = os.path.join(
+    os.path.dirname(os.path.dirname(shutil.which("node") or "/")), "share/doc/nodejs"
+)
+_REAL_JPEG_DIMS = {
+    os.path.join(_SPARK_IMAGES, "kittens/29.5.a_b_EGDP022204.jpg"): (300, 200),
+    os.path.join(_SPARK_IMAGES, "kittens/54893.jpg"): (300, 311),
+    os.path.join(_SPARK_IMAGES, "kittens/DP153539.jpg"): (300, 296),
+    os.path.join(_SPARK_IMAGES, "kittens/DP802813.jpg"): (199, 313),
+    os.path.join(_SPARK_IMAGES, "multi-channel/chr30.4.184.jpg"): (300, 215),
+    os.path.join(_SPARK_IMAGES, "multi-channel/grayscale.jpg"): (300, 215),
+    os.path.join(_NODE_DOCS, "full-white-stripe.jpg"): (493, 312),
+    os.path.join(_NODE_DOCS, "thin-white-stripe.jpg"): (493, 58),
+}
+_REAL_JPEGS = sorted(p for p in _REAL_JPEG_DIMS if os.path.exists(p))
 
-    rows = [
-        {"media_id": 1, "kind": "audio", "payload": _mp3_frame() * 3,
-         "meta": {"width": 0, "height": 0, "n_frames": 1, "sample_rate": 44100}},
-        {"media_id": 2, "kind": "video", "payload": _mp4_fixture(),
-         "meta": {"width": 640, "height": 360, "n_frames": 48, "sample_rate": 0}},
-        {"media_id": 3, "kind": "video", "payload": b"garbage-bytes",
-         "meta": {"width": 0, "height": 0, "n_frames": 0, "sample_rate": 0}},
-    ]
-    from neuscraper_spark.operators.multimodal import MEDIA_DDL
 
-    df = spark.createDataFrame(pd.DataFrame(rows), schema=MEDIA_DDL)
-    out = probe_media(df).toPandas().set_index("media_id")
-    assert out.loc[1, "container"] == "mp3"
-    assert out.loc[1, "sample_rate"] == 44100
-    assert out.loc[2, "container"] == "mp4/isom"
-    assert out.loc[2, "codec"] == "avc1"
-    assert out.loc[2, "width"] == 640 and out.loc[2, "height"] == 360
-    # fail-soft: the bad row carries an error, doesn't kill the task
-    assert out.loc[3, "probe_err"] == "unrecognized container"
-    assert out.loc[3, "container"] is None or pd.isna(out.loc[3, "container"])
+@pytest.mark.skipif(not _REAL_JPEGS, reason="no third-party JPEGs on this host")
+def test_jpeg_reader_real_world_dims():
+    for path in _REAL_JPEGS:
+        with open(path, "rb") as f:
+            assert probe_jpeg(f.read()) == _REAL_JPEG_DIMS[path], path
+
+
+def test_jpeg_reader_walks_to_first_sof():
+    """APPn and DHT segments before the frame header are skipped; any
+    SOFn counts (here SOF2, progressive); a scan before a frame header
+    and a frame header too short for its size fields are errors."""
+    app0 = b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00" + b"\x00" * 9
+    sof2 = b"\xff\xc2" + struct.pack(">HBHHB", 11, 8, 77, 1234, 1) + b"\x01\x11\x00"
+    assert probe_jpeg(b"\xff\xd8" + app0 + sof2 + b"\xff\xd9") == (1234, 77)
+    # DHT (C4) is not a frame header
+    dht = b"\xff\xc4" + struct.pack(">H", 19) + b"\x00" * 17
+    assert probe_jpeg(b"\xff\xd8" + dht + sof2) == (1234, 77)
+    sos = b"\xff\xda" + struct.pack(">H", 8) + b"\x01\x01\x00\x00\x3f\x00"
+    with pytest.raises(ValueError, match="no SOF"):
+        probe_jpeg(b"\xff\xd8" + app0 + sos + sof2)
+    # a frame header too short to hold its size fields
+    with pytest.raises(ValueError, match="SOF segment of 4 bytes"):
+        probe_jpeg(b"\xff\xd8\xff\xc0\x00\x04\x08\x00" + b"\x00" * 16)
+
+
+def _wav(chunks: bytes) -> bytes:
+    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
+
+
+def test_wav_reader_chunks_and_header_errors():
+    """Rate from fmt, length as whole blocks of data; LIST chunks before
+    fmt and odd-size padding are skipped; a chunk past the end, a short
+    fmt and a missing fmt/data raise ValueError."""
+    stereo = struct.pack("<HHIIHH", 1, 2, 8000, 32000, 4, 16)
+    fmt = b"fmt " + struct.pack("<I", 16) + stereo
+    data = b"data" + struct.pack("<I", 4 * 800) + bytes(4 * 800)
+    junk = b"LIST" + struct.pack("<I", 5) + b"INFOx" + b"\0"  # 5 bytes + pad
+    assert probe_wav(_wav(junk + fmt + data)) == (8000, 0.1)
+    assert probe_wav(fake_wav(3)) == (16000, 0.1)
+    with pytest.raises(ValueError, match="truncated WAV chunk"):
+        probe_wav(_wav(fmt + data)[:-5])
+    with pytest.raises(ValueError, match="too short"):
+        probe_wav(_wav(b"fmt " + struct.pack("<I", 8) + bytes(8) + data))
+    with pytest.raises(ValueError, match="missing fmt/data"):
+        probe_wav(_wav(fmt))
+    with pytest.raises(ValueError, match="missing fmt/data"):
+        probe_wav(_wav(data))
 
 
 def test_media_inventory_all_formats(spark):
-    """media_inventory dispatches every codec we own: real decode for
-    BMP/PNG/JPEG/WAV, container probe for MP3/MP4; corrupt blobs
-    fail-soft with err."""
+    """media_inventory dispatches every format: header reads for
+    BMP/PNG/JPEG/WAV, container walks for MP3/MP4; a blob whose header
+    cannot be read gives a row with err and the task survives."""
     import pandas as pd
 
     from neuscraper_spark.operators.media_probe import (
+        MEDIA_DDL,
         fake_mp3,
         fake_mp4,
         inventory_fixture,
         media_inventory,
     )
-    from neuscraper_spark.operators.multimodal import MEDIA_DDL
 
     inv = media_inventory(inventory_fixture(spark, n=12)).toPandas()
     inv = inv.set_index("media_id").sort_index()
     assert inv["fmt"].tolist() == ["bmp", "png", "jpeg", "wav", "mp3", "mp4"] * 2
     assert inv["err"].isna().all()
     assert (inv.loc[0, "width"], inv.loc[0, "height"]) == (32, 24)
+    assert (inv.loc[1, "width"], inv.loc[1, "height"]) == (32, 24)
+    assert (inv.loc[2, "width"], inv.loc[2, "height"]) == (40, 16)
     assert inv.loc[3, "duration_sec"] == 0.1 and inv.loc[3, "sample_rate"] == 16000
     assert inv.loc[4, "bitrate_kbps"] == 128
     assert inv.loc[5, "codec"] == "avc1" and inv.loc[5, "width"] == 320
@@ -178,16 +237,31 @@ def test_media_inventory_all_formats(spark):
     assert inv.loc[10, "duration_sec"] == 0.1045
     assert (inv.loc[11, "width"], inv.loc[11, "height"]) == (336, 189)
 
-    bad = spark.createDataFrame(
-        pd.DataFrame([{"media_id": 99, "kind": "video",
-                       "payload": fake_mp4(0)[:40] + b"\x00" * 4,
-                       "meta": {"width": 0, "height": 0, "n_frames": 0,
-                                "sample_rate": 0}},
-                      {"media_id": 100, "kind": "audio",
-                       "payload": fake_mp3(0)[:3],
-                       "meta": {"width": 0, "height": 0, "n_frames": 0,
-                                "sample_rate": 0}}]),
+    png = fake_png(1)
+    wav = fake_wav(3)
+    sof0 = fake_jpeg(2).index(b"\xff\xc0")
+    bad = {
+        99: fake_mp4(0)[:40] + b"\x00" * 4,
+        100: fake_mp3(0)[:3],
+        101: fake_bmp(0)[:40],  # cut inside the info header
+        102: png[:25],  # cut inside IHDR
+        103: fake_jpeg(2)[: sof0 + 6],  # cut inside SOF0
+        104: wav[:30],  # cut inside fmt
+        105: b"\xff\xd8\xff\xe0" + struct.pack(">H", 4) + b"\x00\x00\xff\xd9",  # no SOFn
+        106: wav[:40] + struct.pack("<I", 10**6) + wav[44:],  # data runs past the end
+        107: png[:29] + bytes([png[29] ^ 1]) + png[30:],  # bad IHDR CRC
+        108: b"garbage-bytes",
+    }
+    df = spark.createDataFrame(
+        pd.DataFrame({"media_id": list(bad), "payload": list(bad.values())}),
         schema=MEDIA_DDL,
     )
-    out = media_inventory(bad).toPandas().set_index("media_id")
+    out = media_inventory(df).toPandas().set_index("media_id")
+    assert sorted(out.index) == sorted(bad)
     assert out["err"].notna().all()
+    assert pd.isna(out.loc[102, "fmt"]) and pd.isna(out.loc[102, "width"])
+    assert "CRC mismatch" in out.loc[107, "err"]
+    assert "no SOF" in out.loc[105, "err"]
+    assert "truncated WAV chunk" in out.loc[106, "err"]
+    assert out.loc[108, "err"] == "unrecognized container"
+    assert pd.isna(out.loc[108, "fmt"])

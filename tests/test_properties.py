@@ -84,35 +84,6 @@ def test_tensorize_arbitrary_token_rows(ids):
     assert not masks[1:].any()
 
 
-# ----------------------------------------------------------- PNG codec
-
-_png_mode = st.sampled_from([1, 2, 3, 4])  # channels
-_png_filter = st.integers(min_value=0, max_value=4)
-
-
-@settings(max_examples=40, deadline=None)
-@given(
-    st.integers(min_value=1, max_value=12),
-    st.integers(min_value=1, max_value=12),
-    _png_mode,
-    _png_filter,
-    st.integers(min_value=0, max_value=2**32 - 1),
-)
-def test_png_roundtrip_property(w, h, ch, ftype, seed):
-    """decode(encode(x)) == x for every size x mode x filter — the
-    unfilter recurrences must invert the filter recurrences exactly."""
-    import numpy as np
-
-    from neuscraper_spark.operators.multimodal import decode_png, encode_png
-
-    rng = np.random.default_rng(seed)
-    shape = (h, w) if ch == 1 else (h, w, ch)
-    arr = rng.integers(0, 256, shape, dtype=np.uint8)
-    out = decode_png(encode_png(arr, filter_type=ftype))
-    assert out.shape == arr.shape
-    assert np.array_equal(out, arr)
-
-
 # ------------------------------------------------- perplexity batching
 
 _words_st = st.lists(
