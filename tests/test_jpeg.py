@@ -1,249 +1,63 @@
-"""JPEG codec: lossy round-trips (PSNR bounds), baseline-vs-progressive
-pixel identity (both streams carry the same quantized coefficients, so
-decode must match exactly), real-world third-party files — baseline AND
-progressive — (decoder is driven by the file's own tables and scan
-scripts, so these validate against the actual format, independent of
-our encoder), a hand-built EOB-run vector, and fail-loud behavior on
-unsupported envelopes."""
+"""JPEG header reader on real third-party files: the (width, height)
+of the first SOFn segment, compared with the dimensions a full T.81
+decode reports for each file. Files absent on a host are skipped."""
 
 import os
+import shutil
 
-import numpy as np
 import pytest
 
-from neuscraper_spark.operators.jpeg import decode_jpeg, encode_jpeg
+from neuscraper_spark.operators.media_probe import _inventory_row, probe_jpeg
+
+# Spark's mllib test images and the nodejs doc assets next to the node
+# binary, with their (w, h) as a full decode reports them
+_SPARK_IMAGES = os.path.join(os.environ.get("SPARK_HOME", ""), "data/mllib/images/origin")
+_NODE_DOCS = os.path.join(
+    os.path.dirname(os.path.dirname(shutil.which("node") or "/")), "share/doc/nodejs"
+)
+# baseline (SOF0) files
+_BASELINE_DIMS = {
+    os.path.join(_SPARK_IMAGES, "kittens/29.5.a_b_EGDP022204.jpg"): (300, 200),
+    os.path.join(_SPARK_IMAGES, "kittens/54893.jpg"): (300, 311),
+    os.path.join(_SPARK_IMAGES, "kittens/DP153539.jpg"): (300, 296),
+    os.path.join(_SPARK_IMAGES, "kittens/DP802813.jpg"): (199, 313),
+    os.path.join(_SPARK_IMAGES, "multi-channel/chr30.4.184.jpg"): (300, 215),
+}
+# progressive (SOF2) files
+_PROGRESSIVE_DIMS = {
+    os.path.join(_SPARK_IMAGES, "multi-channel/grayscale.jpg"): (300, 215),
+    os.path.join(_NODE_DOCS, "full-white-stripe.jpg"): (493, 312),
+    os.path.join(_NODE_DOCS, "thin-white-stripe.jpg"): (493, 58),
+}
+_BASELINE = sorted(p for p in _BASELINE_DIMS if os.path.exists(p))
+_PROGRESSIVE = sorted(p for p in _PROGRESSIVE_DIMS if os.path.exists(p))
 
 
-def _psnr(a, b):
-    mse = np.mean((a.astype(float) - b.astype(float)) ** 2)
-    return 99.0 if mse == 0 else 10 * np.log10(255**2 / mse)
+def _read(path: str) -> bytes:
+    with open(path, "rb") as f:
+        return f.read()
 
 
-def test_roundtrip_gray_gradient_high_fidelity():
-    yy, xx = np.mgrid[0:48, 0:40]
-    grad = ((xx * 3 + yy * 2) % 256).astype(np.uint8)
-    out = decode_jpeg(encode_jpeg(grad, quality=95))
-    assert out.shape == grad.shape and out.dtype == np.uint8
-    assert _psnr(grad, out) > 40
-
-
-def test_roundtrip_rgb_and_flat():
-    yy, xx = np.mgrid[0:32, 0:40]
-    g = ((xx * 5 + yy * 3) % 256).astype(np.uint8)
-    rgb = np.stack([g, 255 - g, np.roll(g, 7, axis=1)], axis=-1)
-    out = decode_jpeg(encode_jpeg(rgb, quality=95))
-    assert out.shape == rgb.shape
-    assert _psnr(rgb, out) > 35
-    # constant image survives exactly (DC-only blocks) incl. edge
-    # padding of a non-multiple-of-8 canvas
-    flat = np.full((17, 23), 137, dtype=np.uint8)
-    out = decode_jpeg(encode_jpeg(flat, quality=90))
-    assert out.shape == (17, 23)
-    assert int(np.abs(out.astype(int) - 137).max()) == 0
-
-
-def test_quality_monotone():
-    """Lower quality -> smaller file and no better fidelity."""
-    rng = np.random.default_rng(2)
-    img = rng.integers(0, 256, (32, 32), dtype=np.uint8)
-    hi, lo = encode_jpeg(img, quality=95), encode_jpeg(img, quality=30)
-    assert len(lo) < len(hi)
-    assert _psnr(img, decode_jpeg(lo)) <= _psnr(img, decode_jpeg(hi)) + 0.5
-
-
-# real third-party JPEGs discovered on the host (produced by real
-# encoders: they embed their own DQT/DHT, exercise 4:2:0 subsampling
-# and restart markers — CPython/IPython/rust-docs test assets ship
-# small ones). Skipped gracefully where absent.
-import glob as _glob
-
-_SEARCH_GLOBS = [
-    "/usr/lib/python3*/test/imghdrdata/python.jpg",
-    "/root/.rustup/toolchains/*/share/doc/rust/html/embedded-book/assets/verify.jpeg",
-    "/mnt/*/*/*/python/install/lib/python3*/test/imghdrdata/python.jpg",
-    "/mnt/*/*/*/python/install/lib/python3*/site-packages/IPython/core/tests/2x2.jpg",
-    "/opt/spark-*/data/mllib/images/origin/kittens/*.jpg",
-]
-# real-world PROGRESSIVE (SOF2) files: nodejs doc assets, the rust
-# embedded-book photo, and Spark's own mllib test images
-_PROG_GLOBS = [
-    "/usr/share/doc/nodejs/*white-stripe.jpg",
-    "/root/.rustup/toolchains/*/share/doc/rust/html/embedded-book/assets/f3.jpg",
-    "/opt/spark-*/data/mllib/images/origin/multi-channel/grayscale.jpg",
-]
-_REAL_FILES = sorted({p for g in _SEARCH_GLOBS for p in _glob.glob(g)})
-_PROG_FILES = sorted({p for g in _PROG_GLOBS for p in _glob.glob(g)})
-
-
-@pytest.mark.skipif(not _REAL_FILES, reason="no third-party JPEGs on this host")
+@pytest.mark.skipif(not _BASELINE, reason="no baseline third-party JPEGs on this host")
 def test_decode_real_world_files():
-    decoded = 0
-    for path in _REAL_FILES:
-        with open(path, "rb") as f:
-            px = decode_jpeg(f.read())
-        assert px.dtype == np.uint8
-        assert px.shape[0] >= 2 and px.shape[1] >= 2
-        # plausible image content, not garbage: mid-range mean
-        assert 5 < float(px.mean()) < 250
-        decoded += 1
-    assert decoded == len(_REAL_FILES)
+    """Baseline JPEGs: the SOFn walk and the inventory dispatch both
+    give the decoded dimensions."""
+    for path in _BASELINE:
+        payload = _read(path)
+        assert probe_jpeg(payload) == _BASELINE_DIMS[path], path
+        row = _inventory_row(payload)
+        assert (row["fmt"], row["width"], row["height"], row["err"]) == (
+            "jpeg", *_BASELINE_DIMS[path], None), path
 
 
-def test_2x2_known_content():
-    """IPython's 2x2.jpg is a known mid-gray fixture: all four pixels
-    decode to 128 — an exact, externally-produced expectation."""
-    hits = [p for p in _REAL_FILES if p.endswith("2x2.jpg")]
-    if not hits:
-        pytest.skip("fixture absent")
-    with open(hits[0], "rb") as f:
-        px = decode_jpeg(f.read())
-    assert px.shape == (2, 2)
-    assert px.tolist() == [[128, 128], [128, 128]]
-
-
-def test_unsupported_envelopes_raise():
-    with pytest.raises(ValueError):
-        decode_jpeg(b"\x00\x01not a jpeg")
-    yy, xx = np.mgrid[0:16, 0:16]
-    good = encode_jpeg(((xx + yy) % 256).astype(np.uint8))
-    # flip SOF0 -> SOF3 (lossless): honest NotImplementedError
-    sof0 = good.find(b"\xff\xc0")
-    lossless = good[:sof0 + 1] + b"\xc3" + good[sof0 + 2:]
-    with pytest.raises(NotImplementedError):
-        decode_jpeg(lossless)
-    # flip SOF0 -> SOF2: the baseline scan header (Ss=0, Se=63) is
-    # malformed AS a progressive scan — must fail loud, not misdecode
-    prog = good[:sof0 + 1] + b"\xc2" + good[sof0 + 2:]
-    with pytest.raises(ValueError):
-        decode_jpeg(prog)
-    with pytest.raises(ValueError):
-        decode_jpeg(good[:40])  # truncated segment walk
-
-
-def test_progressive_pixel_identical_to_baseline():
-    """Progressive and baseline streams carry the same quantized
-    coefficients, so decode output must match EXACTLY — this pins all
-    four progressive scan decoders (DC first/refine, AC first/refine)
-    against the independently-validated baseline path."""
-    yy, xx = np.mgrid[0:48, 0:40]
-    grad = ((xx * 3 + yy * 2) % 256).astype(np.uint8)
-    rng = np.random.default_rng(7)
-    noise = rng.integers(0, 256, (33, 29), dtype=np.uint8)  # odd dims
-    rgb = np.stack([grad, 255 - grad, np.roll(grad, 7, axis=1)], axis=-1)
-    for img, q in ((grad, 95), (noise, 50), (rgb, 80)):
-        base = decode_jpeg(encode_jpeg(img, quality=q))
-        prog = decode_jpeg(encode_jpeg(img, quality=q, progressive=True))
-        assert np.array_equal(base, prog)
-    # and the envelope really is progressive
-    enc = encode_jpeg(grad, quality=95, progressive=True)
-    assert b"\xff\xc2" in enc and b"\xff\xc0" not in enc
-    # gray: DC first + 2 AC bands + AC refine + DC refine = 5 scans
-    assert enc.count(b"\xff\xda") == 5
-
-
-@pytest.mark.skipif(not _PROG_FILES, reason="no progressive JPEGs on this host")
+@pytest.mark.skipif(not _PROGRESSIVE, reason="no progressive JPEGs on this host")
 def test_decode_real_world_progressive():
-    for path in _PROG_FILES:
-        with open(path, "rb") as f:
-            px = decode_jpeg(f.read())
-        assert px.dtype == np.uint8
-        assert px.shape[0] >= 2 and px.shape[1] >= 2
-        assert 5 < float(px.mean()) < 250
-        if "white-stripe" in path:  # known mostly-white content
-            assert float((px > 240).mean()) > 0.8
-
-
-def test_progressive_gray_twin_matches_color_baseline():
-    """Spark ships the same mllib test image twice: chr30.4.184.jpg
-    (color, BASELINE) and grayscale.jpg (gray, PROGRESSIVE). The
-    progressive decode must track the luma of the baseline decode —
-    two independent third-party encoders, two decode paths."""
-    g_hits = _glob.glob(
-        "/opt/spark-*/data/mllib/images/origin/multi-channel/grayscale.jpg"
-    )
-    c_hits = _glob.glob(
-        "/opt/spark-*/data/mllib/images/origin/multi-channel/chr30.4.184.jpg"
-    )
-    if not (g_hits and c_hits):
-        pytest.skip("spark mllib images absent")
-    g = decode_jpeg(open(g_hits[0], "rb").read()).astype(float)
-    c = decode_jpeg(open(c_hits[0], "rb").read()).astype(float)
-    assert g.shape == c.shape[:2]
-    luma = 0.299 * c[..., 0] + 0.587 * c[..., 1] + 0.114 * c[..., 2]
-    corr = np.corrcoef(g.ravel(), luma.ravel())[0, 1]
-    assert corr > 0.99
-
-
-def test_progressive_eob_run_vector():
-    """Hand-built progressive stream whose AC scan uses an EOB1 symbol
-    (eobrun covering 2 whole blocks) from a custom DHT — the Annex K
-    tables our encoder ships carry no EOBn>0 symbols, so this path
-    needs its own vector. The same image coded with plain per-block
-    EOBs must decode identically."""
-    import struct as _struct
-
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + _struct.pack(">H", len(body) + 2) + body
-
-    def dqt_all_ones():
-        return seg(0xDB, bytes([0]) + bytes([1] * 64))
-
-    sof = seg(0xC2, _struct.pack(">BHHB", 8, 16, 16, 1) + bytes([1, 0x11, 0]))
-    # DC table 0: symbols {cat0, cat3} at lengths 1 and 2
-    dc_dht = seg(0xC4, bytes([0x00, 1, 1] + [0] * 14) + bytes([0, 3]))
-    # AC table 0: canonical codes '0'->0x00 (EOB), '10'->0x01
-    # (run0/size1), '110'->0x10 (EOB1: eobrun covers (1<<1)+bit blocks)
-    ac_dht = seg(
-        0xC4, bytes([0x10, 1, 1, 1] + [0] * 13) + bytes([0x00, 0x01, 0x10])
-    )
-    dc_sos = seg(0xDA, bytes([1, 1, 0x00, 0, 0, 0x00]))
-    ac_sos = seg(0xDA, bytes([1, 1, 0x00, 1, 63, 0x00]))
-
-    from neuscraper_spark.operators.jpeg import _BitWriter
-
-    # DC scan: 4 blocks (2x2 grid for 16x16 at 1x1), dc = 4, 4, 4, 4
-    bw = _BitWriter()
-    bw.write(0b10, 2)   # cat 3
-    bw.write(0b100, 3)  # diff +4
-    for _ in range(3):
-        bw.write(0b0, 1)  # cat 0 (diff 0)
-    bw.flush()
-    dc_bits = bytes(bw.out)
-
-    # Stream A — block0: coeff +1 at k=1 then EOB; blocks 1..3 in ONE
-    # EOB1 run: symbol 0x10 + appended bit 1 -> (1<<1)+1 = 3 blocks
-    bw = _BitWriter()
-    bw.write(0b10, 2)   # 0x01: run 0, size 1
-    bw.write(1, 1)      # magnitude +1
-    bw.write(0b0, 1)    # EOB closes block 0
-    bw.write(0b110, 3)  # 0x10: EOB1
-    bw.write(1, 1)      # appended bit -> run of 3 blocks
-    bw.flush()
-    ac_a = bytes(bw.out)
-    # Stream B — same coefficients, plain per-block EOBs only
-    bw = _BitWriter()
-    bw.write(0b10, 2)
-    bw.write(1, 1)
-    bw.write(0b0, 1)
-    for _ in range(3):
-        bw.write(0b0, 1)
-    bw.flush()
-    ac_b = bytes(bw.out)
-
-    head = b"\xff\xd8" + dqt_all_ones() + sof + dc_dht + ac_dht
-    img_a = decode_jpeg(head + dc_sos + dc_bits + ac_sos + ac_a + b"\xff\xd9")
-    img_b = decode_jpeg(head + dc_sos + dc_bits + ac_sos + ac_b + b"\xff\xd9")
-    assert np.array_equal(img_a, img_b)
-    assert img_a.shape == (16, 16)
-    # block0 carries an AC ripple; the EOB-run blocks are uniform DC
-    assert len(np.unique(img_a[:8, :8])) > 1
-    assert len(np.unique(img_a[8:, 8:])) == 1
-
-
-def test_dispatch_and_resize_jpeg():
-    from neuscraper_spark.operators import multimodal as M
-
-    px = M._decode_image(M._fake_jpeg(2))
-    assert px.dtype == np.uint8 and px.ndim == 2
-    px3 = M._decode_image(M._fake_jpeg(3))
-    assert px3.ndim == 3
+    """Progressive JPEGs: their frame header is a SOF2, which the walk
+    reads like a SOF0. grayscale.jpg also carries a SOF0 inside an
+    APP segment ahead of its own frame header; the walk skips it."""
+    for path in _PROGRESSIVE:
+        payload = _read(path)
+        assert probe_jpeg(payload) == _PROGRESSIVE_DIMS[path], path
+        row = _inventory_row(payload)
+        assert (row["fmt"], row["width"], row["height"], row["err"]) == (
+            "jpeg", *_PROGRESSIVE_DIMS[path], None), path

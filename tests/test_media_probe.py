@@ -1,11 +1,10 @@
-"""Header readers (BMP info header, PNG IHDR, JPEG SOFn, WAV fmt/data,
-MP3 frame walk, MP4 box walk) against hand-built spec fixtures and real
-third-party files. Expected values are computed on paper from the
-public specs (ISO 11172-3, ISO 14496-12, T.81, RIFF) or, for the real
-files, recorded from a full decode, not from a reference tool."""
+"""Header readers (JPEG SOFn walk, MP3 frame walk, MP4 box walk) against
+hand-built spec fixtures and real third-party files, and the
+media_inventory stage over every format. Expected values are computed
+on paper from the public specs (ISO 11172-3, ISO 14496-12, T.81), not
+from a reference tool. The BMP/PNG/WAV readers and the real-world JPEG
+dimensions are covered in test_multimodal.py and test_jpeg.py."""
 
-import os
-import shutil
 import struct
 
 import pytest
@@ -18,7 +17,6 @@ from neuscraper_spark.operators.media_probe import (
     probe_jpeg,
     probe_mp3,
     probe_mp4,
-    probe_wav,
 )
 
 
@@ -140,33 +138,6 @@ def test_mp4_box_walk():
         probe_mp4(b"\x00\x00\x00\xff" + b"moov")  # size past end
 
 
-# real third-party JPEGs with their (w, h) as a full T.81 decode reports
-# them: Spark's mllib test images (grayscale.jpg and both nodejs stripes
-# are progressive) and the nodejs doc assets next to the node binary
-_SPARK_IMAGES = os.path.join(os.environ.get("SPARK_HOME", ""), "data/mllib/images/origin")
-_NODE_DOCS = os.path.join(
-    os.path.dirname(os.path.dirname(shutil.which("node") or "/")), "share/doc/nodejs"
-)
-_REAL_JPEG_DIMS = {
-    os.path.join(_SPARK_IMAGES, "kittens/29.5.a_b_EGDP022204.jpg"): (300, 200),
-    os.path.join(_SPARK_IMAGES, "kittens/54893.jpg"): (300, 311),
-    os.path.join(_SPARK_IMAGES, "kittens/DP153539.jpg"): (300, 296),
-    os.path.join(_SPARK_IMAGES, "kittens/DP802813.jpg"): (199, 313),
-    os.path.join(_SPARK_IMAGES, "multi-channel/chr30.4.184.jpg"): (300, 215),
-    os.path.join(_SPARK_IMAGES, "multi-channel/grayscale.jpg"): (300, 215),
-    os.path.join(_NODE_DOCS, "full-white-stripe.jpg"): (493, 312),
-    os.path.join(_NODE_DOCS, "thin-white-stripe.jpg"): (493, 58),
-}
-_REAL_JPEGS = sorted(p for p in _REAL_JPEG_DIMS if os.path.exists(p))
-
-
-@pytest.mark.skipif(not _REAL_JPEGS, reason="no third-party JPEGs on this host")
-def test_jpeg_reader_real_world_dims():
-    for path in _REAL_JPEGS:
-        with open(path, "rb") as f:
-            assert probe_jpeg(f.read()) == _REAL_JPEG_DIMS[path], path
-
-
 def test_jpeg_reader_walks_to_first_sof():
     """APPn and DHT segments before the frame header are skipped; any
     SOFn counts (here SOF2, progressive); a scan before a frame header
@@ -183,30 +154,6 @@ def test_jpeg_reader_walks_to_first_sof():
     # a frame header too short to hold its size fields
     with pytest.raises(ValueError, match="SOF segment of 4 bytes"):
         probe_jpeg(b"\xff\xd8\xff\xc0\x00\x04\x08\x00" + b"\x00" * 16)
-
-
-def _wav(chunks: bytes) -> bytes:
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-
-
-def test_wav_reader_chunks_and_header_errors():
-    """Rate from fmt, length as whole blocks of data; LIST chunks before
-    fmt and odd-size padding are skipped; a chunk past the end, a short
-    fmt and a missing fmt/data raise ValueError."""
-    stereo = struct.pack("<HHIIHH", 1, 2, 8000, 32000, 4, 16)
-    fmt = b"fmt " + struct.pack("<I", 16) + stereo
-    data = b"data" + struct.pack("<I", 4 * 800) + bytes(4 * 800)
-    junk = b"LIST" + struct.pack("<I", 5) + b"INFOx" + b"\0"  # 5 bytes + pad
-    assert probe_wav(_wav(junk + fmt + data)) == (8000, 0.1)
-    assert probe_wav(fake_wav(3)) == (16000, 0.1)
-    with pytest.raises(ValueError, match="truncated WAV chunk"):
-        probe_wav(_wav(fmt + data)[:-5])
-    with pytest.raises(ValueError, match="too short"):
-        probe_wav(_wav(b"fmt " + struct.pack("<I", 8) + bytes(8) + data))
-    with pytest.raises(ValueError, match="missing fmt/data"):
-        probe_wav(_wav(fmt))
-    with pytest.raises(ValueError, match="missing fmt/data"):
-        probe_wav(_wav(data))
 
 
 def test_media_inventory_all_formats(spark):

@@ -1,516 +1,167 @@
-"""Multimodal plumbing: schema, real BMP/WAV codecs, decode stage,
-frame sampling, resize, honest stubs for compressed codecs."""
+"""BMP, PNG and WAV header readers against hand-built spec layouts, and
+the determinism of the all-format inventory fixture. Expected values
+are computed on paper from the public specs (BITMAPINFOHEADER, PNG
+IHDR, RIFF/WAVE), not from a reference tool."""
 
 import struct
+import zlib
 
-import numpy as np
 import pytest
 
-from neuscraper_spark.operators import multimodal as M
+from neuscraper_spark.operators.media_probe import (
+    INVENTORY_DDL,
+    _inventory_row,
+    fake_bmp,
+    fake_png,
+    fake_wav,
+    inventory_fixture,
+    media_inventory,
+    probe_bmp,
+    probe_png,
+    probe_wav,
+)
 
 
-@pytest.fixture(scope="module")
-def media(spark):
-    return M.media_table(spark, n=60, partitions=4).cache()
+def test_schema_and_determinism(spark):
+    """The fixture's blobs and the inventory rows do not depend on the
+    partitioning, and the stage emits exactly INVENTORY_DDL."""
+    four = inventory_fixture(spark, n=60, partitions=4)
+    two = inventory_fixture(spark, n=60, partitions=2)
+    a = four.toPandas().sort_values("media_id")["payload"].map(bytes).tolist()
+    b = two.toPandas().sort_values("media_id")["payload"].map(bytes).tolist()
+    assert len(a) == 60 and a == b
+
+    inv = media_inventory(four)
+    assert inv.schema == spark.createDataFrame([], INVENTORY_DDL).schema
+    x = inv.toPandas().sort_values("media_id").reset_index(drop=True)
+    y = media_inventory(two).toPandas().sort_values("media_id").reset_index(drop=True)
+    assert x.equals(y)
+    assert set(x["fmt"]) == {"bmp", "png", "jpeg", "wav", "mp3", "mp4"}
+    assert x["err"].isna().all()
 
 
-def test_schema_and_determinism(spark, media):
-    pdf = media.toPandas()
-    assert len(pdf) == 60
-    assert set(pdf["kind"]) == {"image", "audio", "video"}
-    again = M.media_table(spark, n=60, partitions=2).toPandas()
-    a = pdf.sort_values("media_id")["payload"].map(bytes).tolist()
-    b = again.sort_values("media_id")["payload"].map(bytes).tolist()
-    assert a == b  # payloads independent of partitioning
-
-
-def test_decode_features(spark, media):
-    out = M.decode_features(media).toPandas()
-    for kind in ("image", "audio"):
-        rows = out[out["kind"] == kind]
-        assert len(rows) == 20
-        assert all(len(f) == 4 for f in rows["features"])
-    assert all(f is None for f in out[out["kind"] == "video"]["features"])
-
-
-def test_frame_sample(spark, media):
-    frames = M.frame_sample(media, every_n=4).toPandas()
-    vids = media.filter("kind = 'video'").toPandas()
-    import math
-
-    want = sum(math.ceil(m["n_frames"] / 4) for m in vids["meta"])
-    assert len(frames) == want
-    assert (frames["frame_idx"] % 4 == 0).all()
-
-
-def test_decode_rejects_compressed_payload():
-    # a corrupt JPEG now reaches the REAL decoder and fails loud
-    with pytest.raises(ValueError):
-        M._decode_image(b"\xff\xd8\xff\xe0 fake jpeg header" + b"\0" * 40)
-    # codecs without a real decoder still raise the honest stub error
-    with pytest.raises(NotImplementedError):
-        M._decode_image(b"\x00\x00\x00\x18ftypmp42" + b"\0" * 40)
-
-
-# ------------------------------------------------------------- BMP codec
-
-
-def test_bmp_roundtrip_24bpp_odd_width():
-    # width 33: row stride 99 -> padded to 100, exercises the pad path
-    rng = np.random.default_rng(5)
-    px = rng.integers(0, 256, size=(17, 33, 3), dtype=np.uint8)
-    assert np.array_equal(M.decode_bmp(M.encode_bmp(px)), px)
-
-
-def test_bmp_roundtrip_8bpp_gray():
-    rng = np.random.default_rng(6)
-    px = rng.integers(0, 256, size=(9, 31), dtype=np.uint8)
-    assert np.array_equal(M.decode_bmp(M.encode_bmp(px)), px)
+# ------------------------------------------------------------------ BMP
 
 
 def test_bmp_golden_layout():
-    """Pin the wire layout: 2x2 24bpp image, bottom-up BGR rows."""
-    px = np.array(
-        [[[255, 0, 0], [0, 255, 0]], [[0, 0, 255], [1, 2, 3]]], dtype=np.uint8
-    )
-    raw = M.encode_bmp(px)
+    """Pin the fixture's wire layout and read it back: 14-byte file
+    header, 40-byte BITMAPINFOHEADER, 24 bpp rows padded to 4 bytes;
+    a negative height (top-down rows) reads as its magnitude."""
+    raw = fake_bmp(1)  # 48 x 32
     assert raw[:2] == b"BM"
-    data_offset = struct.unpack_from("<I", raw, 10)[0]
-    assert data_offset == 54  # no palette for 24bpp
-    # bottom row first, BGR, rows padded to 8 bytes
-    assert raw[54:60] == bytes([255, 0, 0, 3, 2, 1])  # blue px, (1,2,3) as BGR
-    assert raw[62:68] == bytes([0, 0, 255, 0, 255, 0])  # red px, green px
+    assert struct.unpack_from("<I", raw, 2)[0] == len(raw)
+    assert struct.unpack_from("<I", raw, 10)[0] == 54  # no palette for 24bpp
+    assert struct.unpack_from("<IiiHH", raw, 14) == (40, 48, 32, 1, 24)
+    assert len(raw) == 54 + 48 * 3 * 32  # 144-byte rows need no pad
+    assert probe_bmp(raw) == (48, 32)
+    odd = fake_bmp(2)  # 64 x 24
+    assert probe_bmp(odd) == (64, 24)
+
+    # a hand-built 2 x 2 top-down bitmap: 6-byte rows padded to 8
+    info = struct.pack("<IiiHHIIiiII", 40, 2, -2, 1, 24, 0, 16, 0, 0, 0, 0)
+    top_down = b"BM" + struct.pack("<IHHI", 70, 0, 0, 54) + info + bytes(16)
+    assert probe_bmp(top_down) == (2, 2)
+    assert _inventory_row(top_down)["height"] == 2
+
+    # an OS/2 BITMAPCOREHEADER (12 bytes) and a cut header raise
+    core = bytearray(top_down)
+    struct.pack_into("<I", core, 14, 12)
+    with pytest.raises(ValueError, match="not a BITMAPINFOHEADER"):
+        probe_bmp(bytes(core))
+    with pytest.raises(ValueError, match="truncated BMP header"):
+        probe_bmp(top_down[:53])
 
 
-def test_bmp_rejects_unsupported_compression():
-    raw = bytearray(M.encode_bmp(np.zeros((4, 4, 3), dtype=np.uint8)))
-    struct.pack_into("<I", raw, 30, 3)  # BI_BITFIELDS: honest gap
-    with pytest.raises(NotImplementedError):
-        M.decode_bmp(bytes(raw))
-    # RLE method on a mismatched bit depth is malformed, not a gap
-    raw2 = bytearray(M.encode_bmp(np.zeros((4, 4, 3), dtype=np.uint8)))
-    struct.pack_into("<I", raw2, 30, 1)  # BI_RLE8 on 24bpp
-    with pytest.raises(ValueError):
-        M.decode_bmp(bytes(raw2))
+# ------------------------------------------------------------------ PNG
 
 
-# ------------------------------------------------------------- WAV codec
+def _chunk(ctype: bytes, body: bytes) -> bytes:
+    return (struct.pack(">I", len(body)) + ctype + body
+            + struct.pack(">I", zlib.crc32(ctype + body)))
 
 
-def test_wav_roundtrip_mono16():
-    rng = np.random.default_rng(7)
-    s = rng.integers(-30000, 30000, size=1600, dtype=np.int16)
-    got, sr = M.decode_wav(M.encode_wav(s, 8000))
-    assert sr == 8000 and np.array_equal(got, s)
-
-
-def test_wav_roundtrip_stereo16():
-    rng = np.random.default_rng(8)
-    s = rng.integers(-30000, 30000, size=(800, 2), dtype=np.int16)
-    got, sr = M.decode_wav(M.encode_wav(s, 44100))
-    assert sr == 44100 and got.shape == (800, 2) and np.array_equal(got, s)
-
-
-def test_wav_skips_extra_chunks_and_pads():
-    """LIST chunk before fmt/data, odd-size chunk padding honoured."""
-    s = np.arange(100, dtype=np.int16)
-    raw = M.encode_wav(s, 16000)
-    # splice an odd-sized junk chunk right after 'WAVE'
-    junk = b"LIST" + struct.pack("<I", 5) + b"INFOx" + b"\0"  # 5 bytes + pad
-    spliced = raw[:12] + junk + raw[12:]
-    spliced = spliced[:4] + struct.pack("<I", len(spliced) - 8) + spliced[8:]
-    got, sr = M.decode_wav(spliced)
-    assert sr == 16000 and np.array_equal(got, s)
-
-
-def test_wav_8bit_widened():
-    fmt = struct.pack("<HHIIHH", 1, 1, 8000, 8000, 1, 8)
-    data = bytes([0, 128, 255])
-    raw = (b"RIFF" + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(data) + 1)
-           + b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-           + b"data" + struct.pack("<I", len(data)) + data + b"\0")
-    got, sr = M.decode_wav(raw)
-    assert got.tolist() == [-32768, 0, 32512]
-
-
-# ------------------------------------------------------------- resize
-
-
-def test_resize_nearest_identity_and_downscale():
-    px = np.arange(64, dtype=np.uint8).reshape(8, 8)
-    assert np.array_equal(M.resize_nearest(px, 8, 8), px)
-    half = M.resize_nearest(px, 4, 4)
-    assert half.shape == (4, 4)
-    # center-sampling picks px[1,1], px[1,3], ...
-    assert half[0, 0] == px[1, 1] and half[3, 3] == px[7, 7]
-
-
-def test_resize_images_spark(spark, media):
-    real_rows = media.filter(
-        "kind = 'image' AND media_id % 2 = 0"
-    )  # real-container rows (BMP or PNG, even ids)
-    out = M.resize_images(real_rows, 16, 12).toPandas()
-    assert len(out) > 0
-    seen = set()
-    for _, r in out.iterrows():
-        assert r["meta"]["width"] == 16 and r["meta"]["height"] == 12
-        payload = bytes(r["payload"])
-        seen.add(payload[:2])
-        px = M._decode_image(payload)  # resize preserves the container
-        assert px.shape[:2] == (12, 16)
-    assert b"BM" in seen and b"\x89P" in seen  # both codecs exercised
-
-
-def test_resize_compressed_raises(spark, media):
-    fake = media.filter("kind = 'image' AND media_id % 2 = 1")  # FAKE container
-    with pytest.raises(Exception, match="NotImplementedError|imaging library"):
-        M.resize_images(fake, 16, 16).count()
-
-
-def test_media_table_real_rows_decode(spark, media):
-    """The real-container rows decode through the real codecs to the
-    declared meta shapes."""
-    pdf = media.toPandas().sort_values("media_id")
-    for _, r in pdf.iterrows():
-        payload = bytes(r["payload"])
-        if r["kind"] == "image" and payload[:2] == b"BM":
-            px = M.decode_bmp(payload)
-            assert px.shape[0] == r["meta"]["height"]
-            assert px.shape[1] == r["meta"]["width"]
-        if r["kind"] == "image" and payload[:8] == M._PNG_SIG:
-            px = M.decode_png(payload)
-            assert px.shape[0] == r["meta"]["height"]
-            assert px.shape[1] == r["meta"]["width"]
-        if r["kind"] == "audio" and payload[:4] == b"RIFF":
-            s, sr = M.decode_wav(payload)
-            assert sr == r["meta"]["sample_rate"] and len(s) == sr // 10
-
-
-def test_bmp_color_palette_expands_to_rgb():
-    """8bpp BMP with a COLOR palette expands to [h, w, 3] RGB via the
-    palette lookup (BGRA quads -> RGB); an unused color entry must not
-    flip a grayscale image to 3-D."""
-    img = np.full((4, 4), 7, dtype=np.uint8)
-    raw = bytearray(M.encode_bmp(img))
-    off = 14 + 40 + 7 * 4  # palette entry 7 (used by every pixel), BGRA
-    raw[off:off + 3] = bytes([10, 20, 30])
-    px = M.decode_bmp(bytes(raw))
-    assert px.shape == (4, 4, 3)
-    assert (px == np.array([30, 20, 10], dtype=np.uint8)).all()
-
-    raw2 = bytearray(M.encode_bmp(img))
-    off2 = 14 + 40 + 9 * 4  # entry 9 is unused
-    raw2[off2:off2 + 3] = bytes([10, 20, 30])
-    assert M.decode_bmp(bytes(raw2)).shape == (4, 4)
-
-
-def _wav(fmt_code, bits, data, channels=1, rate=8000, extensible=False):
-    if extensible:
-        # real WAVE_FORMAT_EXTENSIBLE layout: base(16) + cbSize(2) +
-        # wValidBitsPerSample(2) + dwChannelMask(4) + SubFormat GUID(16)
-        sub = struct.pack("<H", fmt_code) + b"\x00\x00" + b"\x00" * 12
-        fmt = (struct.pack("<HHIIHH", 0xFFFE, channels, rate,
-                           rate * channels * bits // 8, channels * bits // 8,
-                           bits)
-               + struct.pack("<HHI", 22, bits, 0) + sub)
-    else:
-        fmt = struct.pack("<HHIIHH", fmt_code, channels, rate,
-                          rate * channels * bits // 8, channels * bits // 8, bits)
-    chunks = b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    chunks += b"data" + struct.pack("<I", len(data)) + data
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-
-
-def test_wav_float32_and_24bit():
-    # float32 PCM (format 3)
-    f32 = np.array([0.5, -0.25, 1.0, -1.0], dtype="<f4")
-    s, rate = M.decode_wav(_wav(3, 32, f32.tobytes()))
-    assert rate == 8000 and s.dtype == np.float32
-    assert np.array_equal(s, f32)
-
-    # 24-bit PCM: value 0x123456 -> top 16 bits 0x1234; -1 -> -1>>8 = -1
-    data = bytes([0x56, 0x34, 0x12]) + bytes([0xFF, 0xFF, 0xFF])
-    s, _ = M.decode_wav(_wav(1, 24, data))
-    assert s.dtype == np.int16
-    assert s[0] == 0x1234 and s[1] == -1
-
-    # EXTENSIBLE wrapper resolves through the SubFormat GUID
-    s, _ = M.decode_wav(_wav(3, 32, f32.tobytes(), extensible=True))
-    assert np.array_equal(s, f32)
-
-    # unsupported bit depth still raises
-    with pytest.raises(NotImplementedError):
-        M.decode_wav(_wav(3, 64, b"\x00" * 16))
-
-
-def test_wav_truncated_and_short_fmt_raise():
-    """Truncated data chunk / undersized fmt chunk fail loud (ValueError),
-    never silently decode a shorter clip (ADVICE r3)."""
-    import struct
-
-    f32 = np.array([0.5, -0.25, 1.0, -1.0], dtype="<f4")
-    good = _wav(3, 32, f32.tobytes())
-    with pytest.raises(ValueError):
-        M.decode_wav(good[:-5])  # data chunk body cut short
-    # fmt chunk shorter than the 16-byte PCM header
-    short_fmt = b"fmt " + struct.pack("<I", 8) + b"\x00" * 8
-    payload = b"RIFF" + struct.pack("<I", 4 + len(short_fmt)) + b"WAVE" + short_fmt
-    with pytest.raises(ValueError):
-        M.decode_wav(payload)
-
-
-def test_png_roundtrip_all_filters_and_modes():
-    """encode_png/decode_png round-trip every color mode x every row
-    filter (each filter exercises its own unfilter path)."""
-    rng = np.random.default_rng(3)
-    shapes = [(13, 17), (9, 11, 3), (7, 5, 4), (6, 8, 2)]
-    for shape in shapes:
-        arr = rng.integers(0, 256, shape, dtype=np.uint8)
-        for ft in range(5):
-            out = M.decode_png(M.encode_png(arr, filter_type=ft))
-            assert out.shape == arr.shape
-            assert np.array_equal(out, arr), (shape, ft)
+_SIG = b"\x89PNG\r\n\x1a\n"
 
 
 def test_png_hand_built_spec_vector():
-    """Decode a HAND-FILTERED stream (one row per filter type, values
-    reconstructed on paper from the spec's recurrences) — verifies the
-    decoder against the public spec itself, independent of encode_png."""
-    import struct
-    import zlib
-
+    """A hand-assembled 3 x 4 grayscale PNG (one row per filter type):
+    the IHDR read gives (3, 4) and the dispatch tags it png."""
     raw = (
-        b"\x01\x0a\x05\x05"   # Sub:     [10, 15, 20]
-        b"\x02\x01\x02\x03"   # Up:      [11, 17, 23]
-        b"\x03\x04\x06\x08"   # Average: [9, 19, 29]
-        b"\x04\x02\x03\x04"   # Paeth:   [11, 22, 33]
+        b"\x01\x0a\x05\x05"   # Sub
+        b"\x02\x01\x02\x03"   # Up
+        b"\x03\x04\x06\x08"   # Average
+        b"\x04\x02\x03\x04"   # Paeth
     )
-
-    def chunk(ctype, body):
-        return (struct.pack(">I", len(body)) + ctype + body
-                + struct.pack(">I", zlib.crc32(ctype + body) & 0xFFFFFFFF))
-
     payload = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", 3, 4, 8, 0, 0, 0, 0))
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
+        _SIG
+        + _chunk(b"IHDR", struct.pack(">IIBBBBB", 3, 4, 8, 0, 0, 0, 0))
+        + _chunk(b"IDAT", zlib.compress(raw))
+        + _chunk(b"IEND", b"")
     )
-    want = np.array(
-        [[10, 15, 20], [11, 17, 23], [9, 19, 29], [11, 22, 33]], dtype=np.uint8
-    )
-    assert np.array_equal(M.decode_png(payload), want)
-
-
-def test_png_adam7_roundtrip():
-    """Adam7 interlace round-trips every color mode, including canvases
-    smaller than the 8x8 pass grid (several passes are empty) and every
-    row-filter type within passes."""
-    rng = np.random.default_rng(11)
-    shapes = [(13, 17), (9, 11, 3), (7, 5, 4), (6, 8, 2), (1, 1), (3, 2),
-              (8, 8, 3), (16, 16)]
-    for shape in shapes:
-        arr = rng.integers(0, 256, shape, dtype=np.uint8)
-        for ft in (0, 4):
-            out = M.decode_png(M.encode_png(arr, filter_type=ft, interlace=True))
-            assert out.shape == arr.shape
-            assert np.array_equal(out, arr), (shape, ft)
-
-
-def test_png_16bit_roundtrip():
-    """16-bit samples (big-endian pairs; byte-wise filters at bpp
-    offset) round-trip in both sequential and Adam7 envelopes and keep
-    values above 255 intact."""
-    rng = np.random.default_rng(13)
-    for shape in [(9, 7), (5, 6, 3), (4, 3, 4)]:
-        arr = rng.integers(0, 65536, shape, dtype=np.uint16)
-        for il in (False, True):
-            for ft in (0, 1, 2, 3, 4):
-                out = M.decode_png(M.encode_png(arr, filter_type=ft, interlace=il))
-                assert out.dtype == np.uint16
-                assert np.array_equal(out, arr), (shape, il, ft)
-    # a crafted value that would corrupt under any 8-bit truncation
-    tiny = np.array([[256, 65535], [1, 511]], dtype=np.uint16)
-    assert np.array_equal(M.decode_png(M.encode_png(tiny)), tiny)
-
-
-def test_png_adam7_hand_built_spec_vector():
-    """Hand-assembled 8x8 gray Adam7 stream: pass k's pixels carry the
-    constant value 10*k, and the expected full image is built from the
-    spec §8.2 pass grid computed INDEPENDENTLY here — validates pass
-    ordering, pass dimensions and the de-interlace scatter against the
-    spec, not against encode_png."""
-    import struct
-    import zlib
-
-    grid = [(0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-            (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2)]
-    raw = bytearray()
-    want = np.zeros((8, 8), dtype=np.uint8)
-    for k, (x0, y0, dx, dy) in enumerate(grid, start=1):
-        pw = (8 - x0 + dx - 1) // dx
-        ph = (8 - y0 + dy - 1) // dy
-        for _ in range(ph):
-            raw += bytes([0]) + bytes([10 * k]) * pw  # filter None rows
-        want[y0::dy, x0::dx] = 10 * k
-
-    def chunk(ctype, body):
-        return (struct.pack(">I", len(body)) + ctype + body
-                + struct.pack(">I", zlib.crc32(ctype + body) & 0xFFFFFFFF))
-
-    payload = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", 8, 8, 8, 0, 0, 0, 1))
-        + chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + chunk(b"IEND", b"")
-    )
-    got = M.decode_png(payload)
-    assert np.array_equal(got, want)
-    # every pass value must appear exactly its pass-size many times
-    assert sorted(np.unique(got)) == [10, 20, 30, 40, 50, 60, 70]
+    assert probe_png(payload) == (3, 4)
+    row = _inventory_row(payload)
+    assert (row["fmt"], row["width"], row["height"], row["err"]) == ("png", 3, 4, None)
+    assert probe_png(fake_png(4)) == (32, 16)
 
 
 def test_png_corruption_and_unsupported_raise():
-    rng = np.random.default_rng(5)
-    p = M.encode_png(rng.integers(0, 256, (6, 6, 3), dtype=np.uint8))
-    with pytest.raises(ValueError):
-        M.decode_png(p[:-6])  # truncated: IEND lost
+    """A cut header, a flipped IHDR byte (CRC mismatch), a first chunk
+    that is not IHDR and an IHDR of the wrong length raise ValueError.
+    A corrupt IDAT lies past the header and still gives dimensions."""
+    p = fake_png(1)  # 32 x 24
+    with pytest.raises(ValueError, match="truncated PNG header"):
+        probe_png(p[:32])
+    with pytest.raises(ValueError, match="truncated PNG header"):
+        probe_png(_SIG + b"not-chunks")
     bad = bytearray(p)
-    bad[40] ^= 0xFF  # flip an IDAT byte -> CRC mismatch
-    with pytest.raises(ValueError):
-        M.decode_png(bytes(bad))
-    with pytest.raises(ValueError):
-        M.decode_png(b"\x89PNG\r\n\x1a\nnot-chunks")
-    # palette type 3 is an honest NotImplementedError, not a misdecode
-    import struct
-    import zlib as z
+    bad[20] ^= 0xFF  # a width byte inside IHDR
+    with pytest.raises(ValueError, match="CRC mismatch"):
+        probe_png(bytes(bad))
+    text_first = _SIG + _chunk(b"tEXt", b"k\x00v" + bytes(10)) + p[8:]
+    with pytest.raises(ValueError, match="not IHDR"):
+        probe_png(text_first)
+    long_ihdr = _SIG + _chunk(b"IHDR", struct.pack(">IIBBBBB", 2, 2, 8, 3, 0, 0, 0) + b"\x00")
+    with pytest.raises(ValueError, match="not IHDR"):
+        probe_png(long_ihdr)
 
-    def chunk(ctype, body):
-        return (struct.pack(">I", len(body)) + ctype + body
-                + struct.pack(">I", z.crc32(ctype + body) & 0xFFFFFFFF))
-
-    pal = (b"\x89PNG\r\n\x1a\n"
-           + chunk(b"IHDR", struct.pack(">IIBBBBB", 2, 2, 8, 3, 0, 0, 0))
-           + chunk(b"IDAT", z.compress(b"\x00\x00\x00\x00\x00\x00"))
-           + chunk(b"IEND", b""))
-    with pytest.raises(NotImplementedError):
-        M.decode_png(pal)
+    idat = bytearray(p)
+    idat[p.index(b"IDAT") + 6] ^= 0xFF  # inside the zlib stream
+    assert probe_png(bytes(idat)) == (32, 24)
 
 
-def test_image_dispatch_png():
-    rng = np.random.default_rng(7)
-    arr = rng.integers(0, 256, (8, 9), dtype=np.uint8)
-    assert np.array_equal(M._decode_image(M.encode_png(arr)), arr)
-    assert np.array_equal(M._fake_png(4), M._fake_png(4))  # deterministic
-    for i in range(6):
-        px = M.decode_png(M._fake_png(i))
-        assert px.shape[0] >= 16 and px.shape[1] >= 24
+# ------------------------------------------------------------------ WAV
 
 
-# ------------------------------------------------- BMP: RLE + deep bpp
+def _wav(chunks: bytes) -> bytes:
+    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
 
 
-def _bmp_container(width, height, bpp, compression, pal: bytes, data: bytes):
-    data_offset = 14 + 40 + len(pal)
-    header = b"BM" + struct.pack("<IHHI", data_offset + len(data), 0, 0,
-                                 data_offset)
-    dib = struct.pack("<IiiHHIIiiII", 40, width, height, 1, bpp, compression,
-                      len(data), 2835, 2835, len(pal) // 4, 0)
-    return header + dib + pal + data
+_STEREO_FMT = b"fmt " + struct.pack("<I", 16) + struct.pack("<HHIIHH", 1, 2, 8000, 32000, 4, 16)
+_DATA = b"data" + struct.pack("<I", 4 * 800) + bytes(4 * 800)
 
 
-def _gray_quads(n, step):
-    return b"".join(struct.pack("<BBBB", v * step, v * step, v * step, 0)
-                    for v in range(n))
+def test_wav_skips_extra_chunks_and_pads():
+    """A LIST chunk before fmt and odd-size chunk padding are skipped;
+    the rate comes from fmt and the length from whole blocks of data."""
+    junk = b"LIST" + struct.pack("<I", 5) + b"INFOx" + b"\0"  # 5 bytes + pad
+    assert probe_wav(_wav(junk + _STEREO_FMT + _DATA)) == (8000, 0.1)
+    tail = b"cue " + struct.pack("<I", 3) + b"abc" + b"\0"
+    assert probe_wav(_wav(_STEREO_FMT + junk + _DATA + tail)) == (8000, 0.1)
+    # a trailing part block does not count
+    part = b"data" + struct.pack("<I", 4 * 800 + 3) + bytes(4 * 800 + 3) + b"\0"
+    assert probe_wav(_wav(_STEREO_FMT + part)) == (8000, 0.1)
+    assert probe_wav(fake_wav(3)) == (16000, 0.1)
 
 
-def test_bmp_rle8_roundtrip():
-    """Blocky image (runs > 255 force the encoder's run splitting) survives
-    encode_bmp_rle8 -> decode_bmp exactly."""
-    rng = np.random.default_rng(7)
-    img = np.repeat(rng.integers(0, 256, size=(9, 40), dtype=np.uint8),
-                    16, axis=1)  # 640 wide: runs of 16, many values
-    img[3, :] = 200  # one full-row 640-long run: must split at 255
-    back = M.decode_bmp(M.encode_bmp_rle8(img))
-    assert back.shape == img.shape
-    assert (back == img).all()
-
-
-def test_bmp_rle8_color_palette():
-    idx = np.array([[0, 1, 1], [2, 2, 0]], dtype=np.uint8)
-    pal = np.array([[255, 0, 0, 0],     # BGRA: blue
-                    [0, 255, 0, 0],     # green
-                    [0, 0, 255, 0]],    # red
-                   dtype=np.uint8)
-    px = M.decode_bmp(M.encode_bmp_rle8(idx, palette=pal))
-    assert px.shape == (2, 3, 3)
-    assert (px[0, 0] == [0, 0, 255]).all()    # blue -> RGB
-    assert (px[0, 1] == [0, 255, 0]).all()
-    assert (px[1, 0] == [255, 0, 0]).all()    # red -> RGB
-
-
-def test_bmp_rle8_spec_vector():
-    """The documented Windows GDI RLE8 example (MS 'Bitmap Compression',
-    BITMAPINFOHEADER docs): encoded runs, an absolute run with its pad
-    byte, a delta, EOL and EOB — decoded against the hand-expanded
-    grid, independent of this module's own encoder."""
-    stream = bytes([
-        0x03, 0x04, 0x05, 0x06,                   # 04x3, 06x5
-        0x00, 0x03, 0x45, 0x56, 0x67, 0x00,       # absolute 45 56 67 + pad
-        0x02, 0x78,                               # 78x2
-        0x00, 0x02, 0x05, 0x01,                   # delta right 5, up 1
-        0x02, 0x78,                               # 78x2
-        0x00, 0x00,                               # end of line
-        0x09, 0x1E,                               # 1Ex9
-        0x00, 0x01,                               # end of bitmap
-    ])
-    payload = _bmp_container(20, 3, 8, 1, _gray_quads(256, 1), stream)
-    px = M.decode_bmp(payload)
-    row_bottom = [4, 4, 4, 6, 6, 6, 6, 6, 0x45, 0x56, 0x67, 0x78, 0x78,
-                  0, 0, 0, 0, 0, 0, 0]
-    row_mid = [0] * 18 + [0x78, 0x78]
-    row_top = [0x1E] * 9 + [0] * 11
-    assert px.shape == (3, 20)
-    assert px.tolist() == [row_top, row_mid, row_bottom]
-
-
-def test_bmp_rle4_hand_built():
-    stream = bytes([
-        0x05, 0x25,                    # 2,5,2,5,2
-        0x00, 0x03, 0xD4, 0xA0,        # absolute D,4,A (2 bytes, no pad)
-        0x00, 0x00,                    # end of line
-        0x08, 0x3C,                    # 3,C x4
-        0x00, 0x01,                    # end of bitmap
-    ])
-    payload = _bmp_container(8, 2, 4, 2, _gray_quads(16, 17), stream)
-    px = M.decode_bmp(payload)
-    bottom = np.array([2, 5, 2, 5, 2, 0xD, 0x4, 0xA]) * 17
-    top = np.array([3, 0xC] * 4) * 17
-    assert px.shape == (2, 8)
-    assert (px == np.stack([top, bottom])).all()
-
-
-def test_bmp_4bpp_and_1bpp_uncompressed():
-    # 4bpp, 5x2: rows stored bottom-up, high nibble first, 4-byte pad
-    data4 = bytes([0x67, 0x89, 0xA0, 0x00,    # bottom row 6,7,8,9,A
-                   0x12, 0x34, 0x50, 0x00])   # top row 1,2,3,4,5
-    px4 = M.decode_bmp(_bmp_container(5, 2, 4, 0, _gray_quads(16, 17), data4))
-    assert (px4 == np.array([[1, 2, 3, 4, 5], [6, 7, 8, 9, 10]]) * 17).all()
-
-    # 1bpp, 10x2: MSB-first bits
-    data1 = bytes([0x70, 0x80, 0, 0,          # bottom 0111000010
-                   0xAA, 0xC0, 0, 0])         # top    1010101011
-    pal1 = struct.pack("<BBBB", 0, 0, 0, 0) + struct.pack("<BBBB", 255, 255, 255, 0)
-    px1 = M.decode_bmp(_bmp_container(10, 2, 1, 0, pal1, data1))
-    assert (px1 == np.array([[1, 0, 1, 0, 1, 0, 1, 0, 1, 1],
-                             [0, 1, 1, 1, 0, 0, 0, 0, 1, 0]]) * 255).all()
-
-
-def test_bmp_32bpp_uncompressed():
-    # 2x2 BGRX, bottom-up
-    data = bytes([90, 80, 70, 0, 120, 110, 100, 0,    # bottom row
-                  30, 20, 10, 0, 60, 50, 40, 0])      # top row
-    px = M.decode_bmp(_bmp_container(2, 2, 32, 0, b"", data))
-    expect = np.array([[[10, 20, 30], [40, 50, 60]],
-                       [[70, 80, 90], [100, 110, 120]]], dtype=np.uint8)
-    assert (px == expect).all()
+def test_wav_truncated_and_short_fmt_raise():
+    """A chunk that runs past the end, a fmt shorter than the 16-byte PCM
+    header and a missing fmt or data chunk raise ValueError, never read
+    as a shorter clip."""
+    with pytest.raises(ValueError, match="truncated WAV chunk"):
+        probe_wav(_wav(_STEREO_FMT + _DATA)[:-5])
+    with pytest.raises(ValueError, match="too short"):
+        probe_wav(_wav(b"fmt " + struct.pack("<I", 8) + bytes(8) + _DATA))
+    with pytest.raises(ValueError, match="missing fmt/data"):
+        probe_wav(_wav(_STEREO_FMT))
+    with pytest.raises(ValueError, match="missing fmt/data"):
+        probe_wav(_wav(_DATA))
